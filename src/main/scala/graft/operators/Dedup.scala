@@ -221,9 +221,14 @@ object Dedup {
   private def md5SigBands(sig: DataFrame, k: Int): DataFrame =
     sig.select(
       col("doc_id"),
-      posexplode(array((0 until k / 4).map(b =>
-        concat_ws(":", (b * 4 until (b + 1) * 4).map(j => col(s"m$j")): _*)): _*))
-        .as(Seq("band", "band_key")))
+      posexplode(md5BandKeys(j => col(s"m$j"), k)).as(Seq("band", "band_key")))
+
+  /** The k/4 band keys of a signature whose j-th minhash is `m(j)`:
+    * band b joins minhashes 4b..4b+3 with ':'. ONE construction for the
+    * batch sketch and the streaming probes. */
+  private def md5BandKeys(m: Int => Column, k: Int): Column =
+    array((0 until k / 4).map(b =>
+      concat_ws(":", (b * 4 until (b + 1) * 4).map(m): _*)): _*)
 
   /** Session cache for [[md5BandIndex]], keyed like
     * Similarity.indexCache: an admission gate probes the SAME corpus
@@ -273,18 +278,23 @@ object Dedup {
     * `transform` + k × `array_min(transform)` form evaluated its
     * higher-order lambdas interpreted — ProfileNeardup measured it as
     * 6.4 s of the 10 s gate at sf0.1, ~2.4× the codegen'd cost of the
-    * same hashes), then the bands via [[md5SigBands]] VERBATIM — one
+    * same hashes), then the bands via [[md5BandKeys]] VERBATIM — one
     * band construction shared with the batch index, so the sketch and
     * the streaming gate cannot drift. Docs with no shingle (< 3
-    * tokens) drop out, as they do from the batch sketch. */
-  private[graft] def md5BandProbes(docs: DataFrame, k: Int): DataFrame = {
-    val sig = docs.select(col("doc_id"),
+    * tokens) drop out, as they do from the batch sketch. One
+    * (doc_id, band, band_key) row per band. */
+  private[graft] def md5BandProbes(docs: DataFrame, k: Int): DataFrame =
+    md5BandArrays(docs, k)
+      .select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "band_key")))
+
+  /** [[md5BandProbes]] before the explode: one (doc_id, bands) row per
+    * document, `bands(b)` = band b's key — the shape a map-side probe
+    * looks up in one call. */
+  private[graft] def md5BandArrays(docs: DataFrame, k: Int): DataFrame =
+    docs.select(col("doc_id"),
       graft.functions.minhash_sig60(col("tk"), k).as("sig"))
       .filter(size(col("sig")) > 0)
-    md5SigBands(
-      sig.select(col("doc_id") +:
-        (0 until k).map(j => col("sig").getItem(j).as(s"m$j")): _*), k)
-  }
+      .select(col("doc_id"), md5BandKeys(j => col("sig").getItem(j), k).as("bands"))
 
   def minhashLshMd5(s: SparkSession, d: String): DataFrame = {
     val k = 16

@@ -137,9 +137,9 @@ object MoreStreaming {
     * feed an expired key re-emits — correct within-watermark semantics,
     * but WHICH keys re-emit depends on chunk boundaries, and the
     * deterministic DISTINCT oracle can't replay that. Watermark
-    * eviction is instead observed on the staggered serve rigs, whose
-    * id-derived stamps make expiry deterministic
-    * (IndexLifecycleSpec's state-decay test). */
+    * eviction is instead observed on the staggered serve rigs above
+    * their size-gate ceiling, whose id-derived stamps make expiry
+    * deterministic (IndexLifecycleSpec's state-decay test). */
   def sDedup(s: SparkSession, d: String): DataFrame = {
     val (events, maxTs) = keyedEvents(s, d)
     run(s, "s_dedup")(

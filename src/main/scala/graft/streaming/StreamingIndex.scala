@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -110,8 +111,8 @@ object StreamingIndex {
     * ever lands behind the previous chunk's watermark, so nothing is
     * late-dropped and the emitted rows are identical to the
     * single-burst feed (each group's inputs still arrive in one batch:
-    * the serve/gate rigs derive stamps from the event's own id, so one
-    * event = one group). */
+    * the keyed serve/gate plans derive stamps from the event's own id,
+    * so one event = one group; the map-side plans keep no groups). */
   private[streaming] def feedStaggered[A](
       input: MemoryStream[A], events: Seq[A],
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
@@ -123,20 +124,25 @@ object StreamingIndex {
   }
 
   /** Run `body` (a whole rig: start, feed, stop) with NO-DATA
-    * micro-batches disabled — the UPDATE-mode serve rigs' trigger
-    * regime. The staggered drive drains the source between chunks, so
-    * with the default conf every data batch is chased by a no-data
-    * batch whose only work is eager watermark eviction: measured
-    * (tools/ProfileStartStop) 21 triggers for 10 chunks with the
-    * no-data half costing ~45% of trigger wall time for zero emitted
-    * rows. A production serving tier under continuous traffic almost
-    * never runs them (the source is never drained), and in update mode
-    * the emitted rows are watermark-INDEPENDENT — each data batch emits
-    * its own group updates; eviction just folds into the next data
-    * batch, where it remains observed (stateRowsRemoved > 0, store
-    * still watermark-bounded — the expiry spec's assertions hold on the
-    * lazy schedule). APPEND-mode rigs must NOT use this: their final
-    * windows flush on the trailing no-data batch, so disabling it
+    * micro-batches disabled. Only rigs whose plan keeps watermarked
+    * state can run a no-data batch at all, so under the size-gate
+    * ceilings — where the serve rigs and the near-dup gates answer
+    * each arrival map-side with no watermark and no state — the conf
+    * changes nothing. It matters for the ABOVE-ceiling serve plans
+    * (update mode, windowed top-1), the substring gates and the
+    * composed ingest. The staggered drive drains the source between
+    * chunks, so with the default conf every data batch there is chased
+    * by a no-data batch whose only work is eager watermark eviction:
+    * measured (tools/ProfileStartStop) 21 triggers for 10 chunks with
+    * the no-data half costing ~45% of trigger wall time for zero
+    * emitted rows. A production serving tier under continuous traffic
+    * almost never runs them (the source is never drained), and in
+    * update mode the emitted rows are watermark-INDEPENDENT — each
+    * data batch emits its own group updates; eviction just folds into
+    * the next data batch, where it remains observed (stateRowsRemoved
+    * > 0, store still watermark-bounded — the expiry spec's assertions
+    * hold on the lazy schedule). APPEND-mode rigs whose windows flush
+    * on the trailing no-data batch must NOT use this: disabling it
     * drops rows. The conf is read per-query at start(), so the
     * save/restore cannot leak into a concurrently started rig.
     *
@@ -206,15 +212,26 @@ object StreamingIndex {
     * silently reintroduce the key-partitioned shape. */
   private[graft] val NeardupSaltBuckets = 1
 
+  /** The corpus-doc ceiling of the near-dup tier: conf
+    * `graft.neardup.broadcastMaxDocs`, default [[NeardupBroadcastMaxDocs]]. */
+  private def neardupLimit(s: SparkSession): Long =
+    s.conf.getOption("graft.neardup.broadcastMaxDocs")
+      .map(_.toLong).getOrElse(NeardupBroadcastMaxDocs)
+
   /** The (arrival, existing) band-collision pairs for [[sNeardupGate]]:
-    * under [[NeardupBroadcastMaxDocs]] corpus docs the sketch
-    * broadcasts (map-side probe, zero per-batch shuffle); above it the
-    * corpus hint is withheld (probe side broadcasts instead — see
+    * under [[NeardupBroadcastMaxDocs]] corpus docs (with a `bandMap`)
+    * one map-side lookup per arrival against the once-per-pin sketch
+    * map emits the arrival's DISTINCT dup ids; above it the corpus
+    * hint is withheld (probe side broadcasts instead — see
     * [[NeardupSaltBuckets]] for the measured skew story), optionally
     * salted (both knobs conf-overridable — the spec and stress
-    * handles). All shapes emit identical rows over the same index
-    * CONTENT — but see the `dir` contract below for the durable
-    * regimes, where content itself is conf-selected.
+    * handles), and the join emits one row per colliding band. `probes`
+    * are per-arrival (doc_id, bands) rows ([[Dedup.md5BandArrays]] —
+    * the map branch needs them) or per-band (doc_id, band, band_key)
+    * rows, which the join branches take as they are. Every shape emits
+    * the same distinct pairs over the same index CONTENT — but see the
+    * `dir` contract below for the durable regimes, where content
+    * itself is conf-selected.
     *
     * CONTRACT on `dir` (round-13 advice): when non-empty AND
     * `graft.index.durable` is set, the above-ceiling branch DISCARDS
@@ -233,23 +250,26 @@ object StreamingIndex {
   private[graft] def neardupCandidatePairs(
       s: SparkSession, probes: DataFrame, corpus: DataFrame, nDocs: Long,
       dir: String = "",
-      bandMap: Option[() => org.apache.spark.broadcast.Broadcast[KeyedDocsMap]] = None): DataFrame = {
-    val limit = s.conf.getOption("graft.neardup.broadcastMaxDocs")
-      .map(_.toLong).getOrElse(NeardupBroadcastMaxDocs)
+      bandMap: Option[() => Broadcast[KeyedDocsMap]] = None): DataFrame = {
+    val limit = neardupLimit(s)
     val cond = col("s.band") === col("c.band") &&
       col("s.band_key") === col("c.band_key") &&
       col("s.doc_id") =!= col("c.doc_id")
-    // under the ceiling with a caller-supplied band map: probe the
-    // once-per-pin broadcast map-side instead of re-broadcasting the
-    // sketch every trigger (see [[pinnedKeyedMap]]; rows identical)
+    // under the ceiling with a caller-supplied band map: ONE lookup of
+    // the arrival's whole band array against the once-per-pin broadcast
+    // (see [[pinnedKeyedMap]]) answers its sorted distinct dup ids —
+    // no join, no per-trigger broadcast, no cross-band dedup state
     if (nDocs <= limit && bandMap.isDefined) {
       val bc = bandMap.get.apply()
-      val probe = udf((k: String, self: Long) => bc.value.lookup(k, self))
+      val probe = udf((ks: Seq[String], self: Long) => bc.value.lookupDistinct(ks, self))
+      val keys = transform(col("bands"), (k, b) => bandMapKey(b, k))
       return probes
-        .select(col("doc_id"), explode(probe(bandMapKey, col("doc_id"))).as("dup_id"))
+        .select(col("doc_id"), explode(probe(keys, col("doc_id"))).as("dup_id"))
     }
+    val perBand = if (!probes.columns.contains("bands")) probes
+      else probes.select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "band_key")))
     val joined = if (nDocs <= limit) {
-      probes.as("s").join(broadcast(corpus).as("c"), cond)
+      perBand.as("s").join(broadcast(corpus).as("c"), cond)
     } else {
       val r = s.conf.getOption("graft.neardup.saltBuckets")
         .map(_.toInt).getOrElse(NeardupSaltBuckets)
@@ -264,19 +284,19 @@ object StreamingIndex {
       // a₂); "true" probes the full-corpus table.
       val durable = s.conf.getOption("graft.index.durable")
       if (r <= 1 && dir.nonEmpty && durable.contains("updated2"))
-        probes.as("s")
+        perBand.as("s")
           .join(graft.operators.IndexStore.durableBandUpd2(s, dir).as("c"), cond)
       else if (r <= 1 && dir.nonEmpty && durable.contains("updated"))
-        probes.as("s")
+        perBand.as("s")
           .join(graft.operators.IndexStore.durableBandUpd(s, dir).as("c"), cond)
       else if (r <= 1 && dir.nonEmpty && durable.contains("true"))
-        probes.as("s")
+        perBand.as("s")
           .join(graft.operators.IndexStore.durableBandIndex(s, dir).as("c"), cond)
-      else if (r <= 1) probes.as("s").join(corpus.as("c"), cond)
+      else if (r <= 1) perBand.as("s").join(corpus.as("c"), cond)
       else {
         val salted = corpus
           .withColumn("salt", pmod(hash(col("doc_id")), lit(r)))
-        probes
+        perBand
           .withColumn("salt", explode(sequence(lit(0), lit(r - 1))))
           .as("s")
           .join(salted.as("c"), cond && col("s.salt") === col("c.salt"))
@@ -302,8 +322,44 @@ object StreamingIndex {
     * sessions and displaces same-(session, dir, variant) entries whose
     * fingerprint no longer matches — the cache holds at most one live
     * pin per serving variant. */
-  private val pinnedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), (String, DataFrame)]
+  private val pinnedCache = new java.util.concurrent.ConcurrentHashMap[PinKey, Slot[DataFrame]]
+
+  private type PinKey = (SparkSession, String, String)
+
+  /** One cache entry: the pinned value and the fingerprint it was built
+    * under. The slot's monitor is the entry's build lock. */
+  private final class Slot[V <: AnyRef] {
+    var fp: String = _
+    var value: V = _
+  }
+
+  /** The one pin lifecycle behind every cache of this object: at most
+    * one live value per (session, dir, variant), rebuilt when `fp` no
+    * longer matches (the displaced value goes to `displace` once its
+    * replacement exists), entries of stopped sessions swept on every
+    * access. The build runs under the key's own slot monitor and
+    * OUTSIDE the map: `ConcurrentHashMap.compute` forbids mutating the
+    * same map from inside its closure, and pinned builds nest (a feed
+    * build sizing itself through [[pinnedCount]]) — a nested compute
+    * threw "Recursive update" whenever the two keys shared a bin (the
+    * Corpus.pinnedVocab fix, applied to every cache here). Nested builds lock distinct keys, so
+    * they cannot deadlock unless a build re-enters its own key — a
+    * cycle no caller has. */
+  private def pinnedIn[V <: AnyRef](
+      cache: java.util.concurrent.ConcurrentHashMap[PinKey, Slot[V]],
+      key: PinKey, fp: String)(displace: V => Unit)(build: => V): V = {
+    cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
+    val slot = cache.computeIfAbsent(key, _ => new Slot[V])
+    slot.synchronized {
+      if (slot.value == null || slot.fp != fp) {
+        val built = build
+        if (slot.value != null) displace(slot.value)
+        slot.value = built
+        slot.fp = fp
+      }
+      slot.value
+    }
+  }
 
   /** Test hook: drop pinned serving relations (cold-path measurement). */
   private[graft] def clearPinnedCache(): Unit = {
@@ -323,17 +379,12 @@ object StreamingIndex {
     * arrays/seqs shared read-only across reps and consumers; the
     * handful of panels and literal codebooks total a few MB — the doc
     * feeds are the same rows the rigs already collected per rep. */
-  private val feedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), (String, AnyRef)]
+  private val feedCache = new java.util.concurrent.ConcurrentHashMap[PinKey, Slot[AnyRef]]
 
-  private[streaming] def pinnedFeed[A <: AnyRef](
-      s: SparkSession, d: String, variant: String)(build: => A): A = {
-    feedCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val fp = s"@${dirStamp(d)}"
-    feedCache.compute((s, d, variant), (_, cur) =>
-      if (cur != null && cur._1 == fp) cur else (fp, build)
-    )._2.asInstanceOf[A]
-  }
+  private[graft] def pinnedFeed[A <: AnyRef](
+      s: SparkSession, d: String, variant: String)(build: => A): A =
+    pinnedIn(feedCache, (s, d, variant), s"@${dirStamp(d)}")(_ => ())(build)
+      .asInstanceOf[A]
 
   /** The shared recall panel as collected [[VecEvent]]s, vec_id
     * ascending — the query feed of every vector serve rig. */
@@ -360,7 +411,7 @@ object StreamingIndex {
   /** Size-gate scalar cached per (session, corpus stamp, variant) —
     * the count job over a pinned index relation re-ran per rep for a
     * value that only changes when the pin itself is displaced. */
-  private[streaming] def pinnedCount(s: SparkSession, d: String,
+  private[graft] def pinnedCount(s: SparkSession, d: String,
       variant: String)(build: => Long): Long =
     pinnedFeed(s, d, variant) { java.lang.Long.valueOf(build) }.longValue
 
@@ -380,26 +431,18 @@ object StreamingIndex {
 
   private def pinnedCorpus(s: SparkSession, d: String, variant: String,
       inputFingerprint: String = "")(build: => DataFrame): DataFrame = {
-    pinnedCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     graft.Pins.drain()
-    val key = (s, d, variant)
-    val fp = s"$inputFingerprint@${dirStamp(d)}"
-    pinnedCache.compute(key, (_, cur) =>
-      if (cur != null && cur._1 == fp) cur
-      else {
-        // Displacement must not free the old pin's checkpoint blocks
-        // under a consumer — a localCheckpoint RDD has truncated
-        // lineage, so a holder (e.g. an in-flight micro-batch under
-        // the same variant) would fail with missing-block errors
-        // rather than recompute. graft.Pins ENFORCES this: the
-        // displaced pin parks in a to-free list released once its
-        // park-time holders (the streaming queries active at the
-        // displacement, plus any in-flight batch job) are done, so a
-        // long session cycling serving variants still cannot stack
-        // corpus-sized block-manager entries.
-        if (cur != null) graft.Pins.park(s, cur._2)
-        (fp, build.localCheckpoint())
-      })._2
+    // Displacement must not free the old pin's checkpoint blocks under
+    // a consumer — a localCheckpoint RDD has truncated lineage, so a
+    // holder (e.g. an in-flight micro-batch under the same variant)
+    // would fail with missing-block errors rather than recompute.
+    // graft.Pins ENFORCES this: the displaced pin parks in a to-free
+    // list released once its park-time holders (the streaming queries
+    // active at the displacement, plus any in-flight batch job) are
+    // done, so a long session cycling serving variants still cannot
+    // stack corpus-sized block-manager entries.
+    pinnedIn(pinnedCache, (s, d, variant), s"$inputFingerprint@${dirStamp(d)}")(
+      graft.Pins.park(s, _))(build.localCheckpoint())
   }
 
   /** Flat posting map for the under-ceiling hashed-key gate regime:
@@ -450,19 +493,13 @@ object StreamingIndex {
     * above it the durable/sharded join shapes own the plan and no
     * driver-sized collect may happen. */
   private val postingMapCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String),
-    (String, org.apache.spark.broadcast.Broadcast[PostingMap])]
+    PinKey, Slot[Broadcast[PostingMap]]]
 
   private[streaming] def pinnedPostingMap(
       s: SparkSession, d: String, variant: String,
-      corpus: DataFrame): org.apache.spark.broadcast.Broadcast[PostingMap] = {
-    postingMapCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val key = (s, d, variant)
-    val fp = s"@${dirStamp(d)}"
-    postingMapCache.compute(key, (_, cur) =>
-      if (cur != null && cur._1 == fp) cur
-      else {
-        if (cur != null) cur._2.unpersist(false)
+      corpus: DataFrame): Broadcast[PostingMap] =
+    pinnedIn(postingMapCache, (s, d, variant), s"@${dirStamp(d)}")(
+      _.unpersist(false)) {
         val rows = corpus.select(col("ghash"), col("doc_id")).collect()
         val n = rows.length
         val hi = new Array[Long](n); val lo = new Array[Long](n)
@@ -476,13 +513,12 @@ object StreamingIndex {
         }
         val perm = Array.range(0, n).sortBy(j => (hi(j), lo(j), dc(j)))
         val h2 = perm.map(hi); val l2 = perm.map(lo); val d2 = perm.map(dc)
-        (fp, s.sparkContext.broadcast(new PostingMap(h2, l2, d2)))
-      })._2
-  }
+        s.sparkContext.broadcast(new PostingMap(h2, l2, d2))
+      }
 
   /** String-keyed twin of [[PostingMap]] for the band and md5 tiers:
-    * key → posting doc ids (sorted, multiplicity preserved). Lookup
-    * excludes `self`, exactly the broadcast join's rows. */
+    * key → posting doc ids (sorted, multiplicity preserved). Lookups
+    * exclude `self`, exactly the broadcast join's rows. */
   private[graft] final class KeyedDocsMap(
       val m: java.util.HashMap[String, Array[Long]]) extends Serializable {
     def lookup(key: String, self: Long): Array[Long] = {
@@ -495,82 +531,118 @@ object StreamingIndex {
         out.result()
       }
     }
+    /** The sorted distinct doc ids ≠ `self` posted under any of `keys`:
+      * one arrival's candidate set over all its bands. */
+    def lookupDistinct(keys: Seq[String], self: Long): Array[Long] =
+      keys.iterator.flatMap(lookup(_, self)).toArray.sorted.distinct
     def contains(key: String): Boolean = key != null && m.containsKey(key)
   }
 
-  /** Once-per-pin broadcast of a string-keyed doc index (band sketch /
-    * md5 content hashes) — same rationale and lifecycle as
-    * [[pinnedPostingMap]]: the per-trigger BroadcastExchange of the
-    * static side is replaced by one collect per (session, corpus
-    * stamp) and a map-side probe per batch. `keyOf`/`corpus` must be
-    * the same (key, doc_id) relation the join's build side carried. */
-  private val keyedMapCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String),
-    (String, org.apache.spark.broadcast.Broadcast[KeyedDocsMap])]
-
-  private[streaming] def pinnedKeyedMap(
-      s: SparkSession, d: String, variant: String,
-      keyed: => DataFrame): org.apache.spark.broadcast.Broadcast[KeyedDocsMap] = {
-    keyedMapCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val key = (s, d, variant)
-    val fp = s"@${dirStamp(d)}"
-    keyedMapCache.compute(key, (_, cur) =>
-      if (cur != null && cur._1 == fp) cur
-      else {
-        if (cur != null) cur._2.unpersist(false)
-        val rows = keyed.collect()
-        val tmp = new java.util.HashMap[String, scala.collection.mutable.ArrayBuilder.ofLong]()
-        var i = 0
-        while (i < rows.length) {
-          val k0 = rows(i).getString(0)
-          var b = tmp.get(k0)
-          if (b == null) { b = new scala.collection.mutable.ArrayBuilder.ofLong; tmp.put(k0, b) }
-          b += rows(i).getLong(1)
-          i += 1
-        }
-        val m = new java.util.HashMap[String, Array[Long]](tmp.size() * 2)
-        tmp.forEach((k0, b) => m.put(k0, b.result().sorted))
-        (fp, s.sparkContext.broadcast(new KeyedDocsMap(m)))
-      })._2
+  private[graft] object KeyedDocsMap {
+    /** Collects a (key: String, doc_id: Long) relation. */
+    def of(keyed: DataFrame): KeyedDocsMap = {
+      val tmp = new java.util.HashMap[String, scala.collection.mutable.ArrayBuilder.ofLong]()
+      keyed.collect().foreach { r =>
+        tmp.computeIfAbsent(r.getString(0), _ => new scala.collection.mutable.ArrayBuilder.ofLong) +=
+          r.getLong(1)
+      }
+      val m = new java.util.HashMap[String, Array[Long]](tmp.size() * 2)
+      tmp.forEach((k0, b) => m.put(k0, b.result().sorted))
+      new KeyedDocsMap(m)
+    }
   }
+
+  /** IVF cell → the serving corpus's (vec_id, payload) entries in that
+    * cell, vec_id ascending: the serve rigs' once-per-pin broadcast
+    * index. A lookup concatenates the probed cells' entries minus the
+    * query's own id — exactly the candidate rows the keyed join feeds
+    * the windowed top-1. */
+  private[graft] final class CellMap[P](
+      val m: java.util.HashMap[java.lang.Long, Array[(Long, P)]]) extends Serializable {
+    def lookup(cells: Seq[Long], self: Long): Array[(Long, P)] = {
+      val out = Array.newBuilder[(Long, P)]
+      cells.foreach { c =>
+        val es = m.get(c)
+        if (es != null) es.foreach(e => if (e._1 != self) out += e)
+      }
+      out.result()
+    }
+  }
+
+  private[graft] object CellMap {
+    /** Collects a (cell: Long, vec_id: Long, payload) relation. */
+    def of[P](corpus: DataFrame, payload: Row => P): CellMap[P] = {
+      val m = new java.util.HashMap[java.lang.Long, Array[(Long, P)]]()
+      corpus.collect().groupBy(_.getLong(0)).foreach { case (c, rs) =>
+        m.put(c, rs.map(r => (r.getLong(1), payload(r))).sortBy(_._1))
+      }
+      new CellMap(m)
+    }
+  }
+
+  /** Once-per-pin broadcast of a keyed lookup index — the band sketch
+    * and md5 content hashes ([[KeyedDocsMap]]) and the serving corpus
+    * by cell ([[CellMap]]). Same rationale and lifecycle as
+    * [[pinnedPostingMap]]: the per-trigger BroadcastExchange of the
+    * static side (or, for the serve rigs, the per-trigger keyed join
+    * and its state store) is replaced by one collect per (session,
+    * corpus stamp, `inputFingerprint`) and a map-side probe per batch.
+    * `build` must collect the same relation the join's static side
+    * carried; `inputFingerprint` names that relation's pin when the
+    * dirStamp alone does not (a serve map over a rebuilt cell
+    * assignment must displace with its corpus pin). */
+  private val keyedMapCache = new java.util.concurrent.ConcurrentHashMap[
+    PinKey, Slot[Broadcast[_]]]
+
+  private[streaming] def pinnedKeyedMap[M <: AnyRef : scala.reflect.ClassTag](
+      s: SparkSession, d: String, variant: String, inputFingerprint: String = "")(
+      build: => M): Broadcast[M] =
+    pinnedIn(keyedMapCache, (s, d, variant), s"$inputFingerprint@${dirStamp(d)}")(
+      _.unpersist(false))(s.sparkContext.broadcast(build))
+      .asInstanceOf[Broadcast[M]]
 
   /** The composite band lookup key — ONE definition for build and
     * probe sides (band is an int, so the ':' split is unambiguous). */
-  private def bandMapKey: org.apache.spark.sql.Column =
-    concat(col("band").cast("string"), lit(":"), col("band_key"))
+  private def bandMapKey(band: Column, key: Column): Column =
+    concat(band.cast("string"), lit(":"), key)
 
-  /** Broadcast ceiling for the serve joins' STATIC side (conf
+  /** The once-per-pin band map of a (doc_id, band, band_key) sketch. */
+  private def pinnedBandMap(s: SparkSession, d: String, variant: String,
+      bands: DataFrame): Broadcast[KeyedDocsMap] =
+    pinnedKeyedMap(s, d, variant)(KeyedDocsMap.of(
+      bands.select(bandMapKey(col("band"), col("band_key")), col("doc_id"))))
+
+  /** Broadcast ceiling for the serve rigs' STATIC side (conf
     * `graft.serve.broadcastMaxVectors`): a serving row is ~300 B
     * (vec_id + 64-float embedding + cell, or the 8-code PQ row), so the
-    * default 256k-vector gate bounds the broadcast at ~80 MB. */
+    * default 256k-vector gate bounds the broadcast map at ~80 MB. */
   private val ServeBroadcastMaxVectors = 1L << 18
 
-  /** The serve rigs' static candidate relation, size-gated for the
-    * per-trigger join (guide §3: pick the join strategy deliberately).
-    * A localCheckpoint pin carries NO size stats, so the planner fell
-    * to SortMergeJoin and re-shuffled + re-sorted the ENTIRE static
-    * corpus on every micro-batch (executed-plan dumps in plans/r16 —
-    * two Exchanges per trigger). Under the ceiling the static side now
-    * broadcasts (one BroadcastExchange rebuild per trigger — the
-    * documented safe side to force: the PROBE side stays
-    * estimate-driven, round 12's OOM rule); above it the keyed join is
-    * the honest at-scale shape (the corpus is cell-partitioned durable
-    * storage at 100 TB, and a probe reads one partition). */
-  private def gatedServeCorpus(s: SparkSession, d: String,
-      variant: String, corpus: DataFrame): DataFrame = {
-    // the count key carries the PIN's identity (the checkpointed RDD's
-    // id via the LogicalRDD semanticHash), not just (dir, variant): a
-    // pin displaced under the same variant (e.g. a rebuilt cell
-    // assignment) must displace its gate scalar with it, or the
-    // broadcast/keyed decision would be made on the stale count
-    // (r16 advice)
-    val n = pinnedCount(s, d,
-      s"n_serve_${variant}_${corpus.queryExecution.analyzed.semanticHash()}")(
-      corpus.count())
-    val limit = s.conf.getOption("graft.serve.broadcastMaxVectors")
+  /** The serve rigs' size gate (guide §3: pick the strategy
+    * deliberately). Under the ceiling the pinned serving corpus is
+    * collected ONCE per pin into a broadcast [[CellMap]] and every
+    * arrival is answered map-side ([[serveTop1Plan]]): no join, no
+    * Exchange, no state store, no per-trigger BroadcastExchange. Above
+    * it the keyed join is the honest at-scale shape (the corpus is
+    * cell-partitioned durable storage at 100 TB, and a probe reads one
+    * partition): the corpus is never hinted there, and the streaming
+    * side is never force-broadcast (round 12's OOM rule). */
+  private[graft] def serveMapSide(s: SparkSession, d: String, variant: String,
+      corpus: DataFrame): Boolean = {
+    // the count key carries the PIN's identity, not just (dir,
+    // variant): a pin displaced under the same variant (e.g. a rebuilt
+    // cell assignment) must displace its gate scalar with it, or the
+    // map/keyed decision would be made on the stale count (r16 advice)
+    val n = pinnedCount(s, d, s"n_serve_${variant}_${pinId(corpus)}")(corpus.count())
+    n <= s.conf.getOption("graft.serve.broadcastMaxVectors")
       .map(_.toLong).getOrElse(ServeBroadcastMaxVectors)
-    if (n <= limit) broadcast(corpus) else corpus
   }
+
+  /** A pinned relation's identity — the semantic hash of its analyzed
+    * plan, which names the checkpointed RDD — so a value keyed on it
+    * displaces together with the pin. */
+  private def pinId(pin: DataFrame): String =
+    pin.queryExecution.analyzed.semanticHash().toString
 
   /** The pinned (vec_id, embedding, cell) serving relation for a cell
     * assignment — the ONE definition behind the "serve"/"serve_pre"
@@ -643,77 +715,39 @@ object StreamingIndex {
     * TRAINED index and emit their nearest neighbor. The centroid set
     * is collected to the driver and inlined as a LITERAL array — ≤
     * nlist ≈ 64 rows, the one collect a real ANN service performs
-    * (centroids live in serving RAM; the corpus does not) — so the
-    * probe (argmax cosine over the literal, cos DESC / centroid_id ASC
-    * ties via the Long.MaxValue−id trick) is pure MAP-SIDE work: no
-    * join, no shuffle, no state to pick the cell. Candidates then come
-    * from ONE stream-static equi-join on the probed cell (at 100 TB
-    * the corpus is partitioned by cell, so a probe reads one
-    * partition) and the top-1 rerank is the single stateful
-    * aggregation (max of (cos, MaxValue−vec_id) — cos DESC, vec_id ASC
-    * ties), update mode. The aggregation is WINDOWED on the query's
-    * arrival stamp under a watermark, so served-query state expires
-    * once the watermark passes its window — a serving tier that never
-    * expires per-query state eventually dies (the reference's
-    * unbounded-suppress-buffer failure mode, Main.java:198); bounding
-    * it by watermark is C5/C8 applied to the serve path. The window
-    * key changes no emitted row (each qid occupies exactly one
-    * window). A panel query whose probed cell holds only itself emits
-    * nothing, exactly as in the batch/oracle replay. Fully oracled:
-    * probe argmax + rerank window replay in DuckDB over the shared
-    * training CTE. */
+    * (centroids live in serving RAM) — so the probe (argmax cosine
+    * over the literal, cos DESC / centroid_id ASC ties via the
+    * Long.MaxValue−id trick) is pure MAP-SIDE work. The top-1 rerank
+    * over the probed cell (max of (cos, MaxValue−vec_id) — cos DESC,
+    * vec_id ASC ties) is size-gated ([[serveMapSide]]). Under the
+    * ceiling the candidates come from the once-per-pin broadcast
+    * [[CellMap]], and the answer is one stateless projection per
+    * arrival: append mode, no join, no shuffle, no state — the
+    * reference's per-record lookups are stateless maps too
+    * (Main.java:137-141). Above it they come from one stream-static
+    * equi-join on the probed cell (at 100 TB the corpus is partitioned
+    * by cell, so a probe reads one partition), and the top-1 is a
+    * stateful aggregation WINDOWED on the query's arrival stamp under
+    * a watermark, update mode, so per-query state expires once the
+    * watermark passes its window — a serving tier that never expires
+    * per-query state eventually dies (the reference's
+    * unbounded-suppress-buffer failure mode, Main.java:198). Both
+    * regimes emit the same rows. A panel query whose probed cell holds
+    * only itself emits nothing, exactly as in the batch/oracle replay.
+    * Fully oracled: probe argmax + rerank replay in DuckDB over the
+    * shared training CTE. */
   def sAnnServe(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val (cen, cells) = Similarity.ivfIndex(s, d)
-    val cenRows: Seq[(Long, Seq[Double])] = cenLiterals(s, d, "ivf", cen)
-    // PIN the static serving relation: a stream-static join re-executes
-    // its static side EVERY micro-batch, so an unpinned corpus⋈cells
-    // join would re-scan and re-join per batch — ×10 under the
-    // staggered feed, and at a real serving tier ×every-trigger
-    // forever. The checkpoint is the serving-tier move (the corpus is
-    // pinned next to the index), same philosophy as the literal
-    // centroids — and pinned ONCE per (session, corpus), not per rig
-    // start. Routed through servingCorpus so THIS caller carries the
-    // same cells fingerprint as the swap rigs sharing the "serve"
-    // variant: identical assignment ⇒ shared pin, different ⇒ honest
+    // the serving relation is PINNED once per (session, corpus) next to
+    // the index — unpinned, every micro-batch would re-run corpus⋈cells.
+    // Routed through servingCorpus so THIS caller carries the same
+    // cells fingerprint as the swap rigs sharing the "serve" variant:
+    // identical assignment ⇒ shared pin and map, different ⇒ honest
     // displacement (not the round-9 silent stale hit).
     val corpus = servingCorpus(s, d, cells, "serve")
-    val panel = vecPanel(s, d)
-    EventPairing.withStreamingPartitions(s) {
-      val input = MemoryStream[VecEvent]
-      val probed = input.toDF()
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-          // +1 day: keep every stamp strictly above the epoch-0
-          // initial watermark (see sNeardupGate)
-          timestamp_seconds(col("vec_id") + lit(86400L)).as("ts"))
-        .withWatermark("ts", "1 minute")
-        .withColumn("best", array_max(transform(typedlit(cenRows), c =>
-          struct(
-            Similarity.cosine(col("qvec"), c.getField("_2")).as("cos"),
-            (lit(Long.MaxValue) - c.getField("_1")).as("nid")))))
-        .select(col("qid"), col("qvec"), col("ts"),
-          (lit(Long.MaxValue) - col("best.nid")).as("cell"))
-      val served = probed
-        .join(gatedServeCorpus(s, d, "serve", corpus), Seq("cell"))
-        .filter(col("vec_id") =!= col("qid"))
-        .groupBy(window(col("ts"), "1 minute"), col("qid"))
-        .agg(max(struct(
-          Similarity.cosine(col("embedding"), col("qvec")).as("cos"),
-          (lit(Long.MaxValue) - col("vec_id")).as("nid"))).as("top"))
-        .select(col("qid"), (lit(Long.MaxValue) - col("top.nid")).as("vec_id"),
-          col("top.cos").as("cos_sim"))
-      val name = s"s_ann_serve_${nameCounter.incrementAndGet()}"
-      val q = withLazyEviction(s) {
-        served.writeStream.format("memory").queryName(name)
-          .outputMode("update").start()
-      }
-      try {
-        feedStaggered(input, panel.toSeq.sortBy(_.vec_id), q)
-        record("s_ann_serve", q)
-      } finally q.stop()
-      s.table(name).orderBy("qid")
-    }
+    val mapSide = serveMapSide(s, d, "serve", corpus)
+    runServe(s, "s_ann_serve", vecPanel(s, d), mapSide)(
+      serveTop1Plan(s, _, d, "ivf", cen, "serve", corpus, mapSide)).orderBy("qid")
   }
 
   /** s_filtered_serve — FILTERED serving: the batch q_ann_filtered
@@ -721,75 +755,35 @@ object StreamingIndex {
     * "nearest neighbor WHERE label = [[Similarity.FilterLabel]]" — the
     * retrieval-with-metadata shape every production vector service
     * exposes. Three deliberate differences from [[sAnnServe]]:
-    * (1) the static candidate relation is label-filtered BEFORE the
-    * stream ever joins it (the predicate pushes into the corpus scan —
-    * at 100 TB the serving tier's cell-partitioned store is ALSO
+    * (1) the static candidate relation is label-filtered BEFORE any
+    * query reads it (the predicate pushes into the corpus scan of the
+    * pin — at 100 TB the serving tier's cell-partitioned store is ALSO
     * label-pruned, reading ~10 % of the bytes); (2) the probe is
     * WIDENED to the top-2 cells — the FilteredSweep operating surface
     * showed one probe doubling restores the unfiltered operating point
     * at ~10 % selectivity, so the serving plan bakes that knob-turn
     * in (probe ties: cos DESC, centroid_id ASC, via the negated-cos
-    * sort like [[sIvfPqServe]]); (3) a query whose probed cells hold
-    * no label-matching candidate emits nothing — the
-    * empty-result-is-an-answer contract, same as the oracle replay.
-    * Everything else keeps the serve-path shape: literal-inlined
-    * centroids (map-side probe, no state to pick cells), one
-    * stream-static equi-join on the probed cell, and the top-1 rerank
-    * as the single stateful aggregation, WINDOWED under a watermark so
-    * served-query state expires ([[sAnnServe]]'s C5/C8 bound). Fully
+    * sort), and the winner may come from either cell; (3) a query
+    * whose probed cells hold no label-matching candidate emits nothing
+    * — the empty-result-is-an-answer contract, same as the oracle
+    * replay. Everything else is [[sAnnServe]]'s size-gated shape:
+    * map-side against the once-per-pin [[CellMap]] under the ceiling,
+    * the keyed join plus watermarked windowed top-1 above it. Fully
     * oracled: probe top-2, label filter, and rerank replay in DuckDB
     * over the shared IVF training CTE. */
   def sFilteredServe(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val e = Tables.embeddings(s, d)
     val (cen, cells) = Similarity.ivfIndex(s, d)
-    val cenRows: Seq[(Long, Seq[Double])] = cenLiterals(s, d, "ivf", cen)
-    // label filter applied ONCE at pin time (the predicate pushes into
-    // the corpus scan of the materialization job); the serving loop
-    // then reads the pinned label-pruned relation every batch instead
-    // of re-filtering the corpus per trigger ([[sAnnServe]]'s pin)
     val corpus = pinnedCorpus(s, d, "filtered",
       cells.queryExecution.logical.semanticHash().toString) {
       e.filter(col("label") === Similarity.FilterLabel)
         .join(cells, "vec_id")
         .select(col("vec_id"), col("embedding"), col("cell"))
     }
-    val panel = vecPanel(s, d)
-    EventPairing.withStreamingPartitions(s) {
-      val input = MemoryStream[VecEvent]
-      val probed = input.toDF()
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-          // +1 day: keep every stamp strictly above the epoch-0
-          // initial watermark (see sNeardupGate)
-          timestamp_seconds(col("vec_id") + lit(86400L)).as("ts"))
-        .withWatermark("ts", "1 minute")
-        .withColumn("pcells", slice(array_sort(transform(typedlit(cenRows), c =>
-          struct(
-            (-Similarity.cosine(col("qvec"), c.getField("_2"))).as("negcos"),
-            c.getField("_1").as("cid")))), 1, 2))
-        .select(col("qid"), col("qvec"), col("ts"),
-          explode(transform(col("pcells"), p => p.getField("cid"))).as("cell"))
-      val served = probed
-        .join(gatedServeCorpus(s, d, "filtered", corpus), Seq("cell"))
-        .filter(col("vec_id") =!= col("qid"))
-        .groupBy(window(col("ts"), "1 minute"), col("qid"))
-        .agg(max(struct(
-          Similarity.cosine(col("embedding"), col("qvec")).as("cos"),
-          (lit(Long.MaxValue) - col("vec_id")).as("nid"))).as("top"))
-        .select(col("qid"), (lit(Long.MaxValue) - col("top.nid")).as("vec_id"),
-          col("top.cos").as("cos_sim"))
-      val name = s"s_filtered_serve_${nameCounter.incrementAndGet()}"
-      val q = withLazyEviction(s) {
-        served.writeStream.format("memory").queryName(name)
-          .outputMode("update").start()
-      }
-      try {
-        feedStaggered(input, panel.toSeq.sortBy(_.vec_id), q)
-        record("s_filtered_serve", q)
-      } finally q.stop()
-      s.table(name).orderBy("qid")
-    }
+    val mapSide = serveMapSide(s, d, "filtered", corpus)
+    runServe(s, "s_filtered_serve", vecPanel(s, d), mapSide)(
+      serveTop1Plan(s, _, d, "ivf", cen, "filtered", corpus, mapSide, nProbe = 2))
+      .orderBy("qid")
   }
 
   /** s_index_swap — the refresh→serve HANDOFF, the last edge of the
@@ -813,12 +807,9 @@ object StreamingIndex {
     * across the swap, and each side is bit-pinned to its own index's
     * batch replay — both training chains replayed in ONE DuckDB oracle
     * (the suffixed CTE instantiation). Each phase keeps the full
-    * serve-path shape: map-side literal-centroid probe, one
-    * stream-static equi-join on the probed cell, windowed top-1 under
-    * a 1-minute watermark (state expires; C5/C8 as in [[sAnnServe]]).
-    * A query alone in its probed cell emits nothing, per the oracle. */
+    * size-gated serve shape of [[sAnnServe]] ([[serveTop1Plan]]). A
+    * query alone in its probed cell emits nothing, per the oracle. */
   def sIndexSwap(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val panel = vecPanel(s, d)
     val (cenA, cellsA) = Similarity.preArrivalIndex(s, d)
     val (cenB, cellsB) = Similarity.ivfIndex(s, d)
@@ -827,67 +818,124 @@ object StreamingIndex {
     // once per (session, corpus) and are SHARED with sSwapInflight
     // ([[servingCorpus]] — one definition per cache key)
     def servePhase(version: Int, cenTag: String, cen: => DataFrame,
-        corpus: DataFrame,
-        queries: Seq[VecEvent]): DataFrame = {
-      implicit val sqlCtx = s.sqlContext
-      EventPairing.withStreamingPartitions(s) {
-        val input = MemoryStream[VecEvent]
-        val served = serveTop1Plan(s, input.toDF(), d, cenTag, cen, corpus)
-        val name = s"s_index_swap_${nameCounter.incrementAndGet()}"
-        val q = withLazyEviction(s) {
-          served.writeStream.format("memory").queryName(name)
-            .outputMode("update").start()
-        }
-        try {
-          feedStaggered(input, queries.sortBy(_.vec_id), q)
-          record("s_index_swap", q)
-        } finally q.stop()
-        s.table(name).select(lit(version).as("version"),
-          col("qid"), col("vec_id"), col("cos_sim"))
-      }
+        variant: String, cells: DataFrame, queries: Seq[VecEvent]): DataFrame = {
+      val corpus = servingCorpus(s, d, cells, variant)
+      val mapSide = serveMapSide(s, d, variant, corpus)
+      runServe(s, "s_index_swap", queries, mapSide)(
+        serveTop1Plan(s, _, d, cenTag, cen, variant, corpus, mapSide))
+        .select(lit(version).as("version"), col("qid"), col("vec_id"), col("cos_sim"))
     }
     // the arrival timeline: alternating panel positions (by qid rank)
     // land before/after the swap — qid PARITY would not do (the panel
     // grid is stride-spaced, so its ids can share one parity)
-    val ordered = panel.toSeq.sortBy(_.vec_id).zipWithIndex
-    val v1 = servePhase(1, "ivf_pre", cenA, servingCorpus(s, d, cellsA, "serve_pre"),
+    val ordered = panel.sortBy(_.vec_id).zipWithIndex
+    val v1 = servePhase(1, "ivf_pre", cenA, "serve_pre", cellsA,
       ordered.filter(_._2 % 2 == 0).map(_._1))
-    val v2 = servePhase(2, "ivf", cenB, servingCorpus(s, d, cellsB, "serve"),
+    val v2 = servePhase(2, "ivf", cenB, "serve", cellsB,
       ordered.filter(_._2 % 2 == 1).map(_._1))
     v1.unionByName(v2).orderBy("version", "qid")
   }
 
-  /** The single-probe serve topology shared by [[sIndexSwap]] and
-    * [[sSwapInflight]]: map-side literal-centroid argmax probe, one
-    * stream-static equi-join on the probed cell, windowed top-1 under
-    * a 1-minute watermark. The centroids are collected and compiled
-    * INTO the plan (the serving-RAM move of [[sAnnServe]]), so a new
-    * index is literally a new plan. */
-  private def serveTop1Plan(s: SparkSession, stream: DataFrame,
-      d: String, cenTag: String, cen: => DataFrame,
-      corpus: DataFrame): DataFrame = {
-    val cenRows: Seq[(Long, Seq[Double])] = cenLiterals(s, d, cenTag, cen)
-    val probed = stream
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-        // +1 day: keep every stamp strictly above the epoch-0
-        // initial watermark (see sNeardupGate)
-        timestamp_seconds(col("vec_id") + lit(86400L)).as("ts"))
-      .withWatermark("ts", "1 minute")
-      .withColumn("best", array_max(transform(typedlit(cenRows), c =>
-        struct(
+  /** How a serve rig ranks a query's candidates: `prep` adds the
+    * per-query columns the ranking reads (from `qid`, `qvec`),
+    * `payload` names the corpus column a candidate carries, `rank`
+    * builds one candidate's ranking struct from (vec_id, payload),
+    * `lowest` takes the least struct instead of the greatest, and
+    * `out` reads the answer columns off the winner. */
+  private[graft] final case class Rerank[P](payload: String, read: Row => P,
+      prep: DataFrame => DataFrame, rank: (Column, Column) => Column,
+      lowest: Boolean, out: Column => Seq[Column])(
+      implicit val tag: scala.reflect.runtime.universe.TypeTag[P])
+
+  /** Exact-cosine top-1: cos DESC, vec_id ASC ties (MaxValue−vec_id). */
+  private def cosRerank: Rerank[Array[Float]] = Rerank[Array[Float]](
+    "embedding", _.getSeq[Float](2).toArray, identity,
+    (id, emb) => struct(
+      Similarity.cosine(emb, col("qvec")).as("cos"),
+      (lit(Long.MaxValue) - id).as("nid")),
+    lowest = false,
+    top => Seq((lit(Long.MaxValue) - top.getField("nid")).as("vec_id"),
+      top.getField("cos").as("cos_sim")))
+
+  /** The single-query serve topology of every vector serve rig:
+    * the probed cells — argmax cosine over the literal centroids
+    * (`nProbe` = 1) or the top-`nProbe` by (cos DESC, centroid_id ASC)
+    * — then the top-1 of their candidates minus the query itself,
+    * ranked by `rerank`. The centroids are collected and compiled INTO
+    * the plan (the serving-RAM move of [[sAnnServe]]), so a new index
+    * is literally a new plan. With `mapSide` ([[serveMapSide]]) the
+    * candidates come from the once-per-pin broadcast [[CellMap]] of
+    * `corpus` and the winner is `array_max`/`array_min` over them: a
+    * stateless projection, append mode; an empty candidate set has no
+    * winner and emits no row. Without it, one stream-static equi-join
+    * on the probed cell and a top-1 aggregation windowed on the query's
+    * stamp under a 1-minute watermark, update mode. */
+  private[graft] def serveTop1Plan[P](s: SparkSession, stream: DataFrame,
+      d: String, cenTag: String, cen: => DataFrame, variant: String,
+      corpus: DataFrame, mapSide: Boolean, nProbe: Int = 1,
+      rerank: Rerank[P] = cosRerank): DataFrame = {
+    val cenLit = typedlit(cenLiterals(s, d, cenTag, cen))
+    val cells =
+      if (nProbe == 1)
+        array(lit(Long.MaxValue) - array_max(transform(cenLit, c => struct(
           Similarity.cosine(col("qvec"), c.getField("_2")).as("cos"),
-          (lit(Long.MaxValue) - c.getField("_1")).as("nid")))))
-      .select(col("qid"), col("qvec"), col("ts"),
-        (lit(Long.MaxValue) - col("best.nid")).as("cell"))
-    probed
-      .join(gatedServeCorpus(s, d, cenTag, corpus), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .groupBy(window(col("ts"), "1 minute"), col("qid"))
-      .agg(max(struct(
-        Similarity.cosine(col("embedding"), col("qvec")).as("cos"),
-        (lit(Long.MaxValue) - col("vec_id")).as("nid"))).as("top"))
-      .select(col("qid"), (lit(Long.MaxValue) - col("top.nid")).as("vec_id"),
-        col("top.cos").as("cos_sim"))
+          (lit(Long.MaxValue) - c.getField("_1")).as("nid")))).getField("nid"))
+      else
+        transform(slice(array_sort(transform(cenLit, c => struct(
+          (-Similarity.cosine(col("qvec"), c.getField("_2"))).as("negcos"),
+          c.getField("_1").as("cid")))), 1, nProbe), p => p.getField("cid"))
+    val queries = rerank.prep(
+      stream.select(col("vec_id").as("qid"), col("embedding").as("qvec")))
+    val top = if (mapSide) {
+      implicit val tag: scala.reflect.runtime.universe.TypeTag[P] = rerank.tag
+      val bc = pinnedKeyedMap(s, d, s"cells_$variant", pinId(corpus))(
+        CellMap.of(corpus.select(col("cell"), col("vec_id"), col(rerank.payload)),
+          rerank.read))
+      val candidates = udf((cs: Seq[Long], self: Long) => bc.value.lookup(cs, self))
+      val ranked = transform(candidates(cells, col("qid")),
+        c => rerank.rank(c.getField("_1"), c.getField("_2")))
+      val winner = if (rerank.lowest) array_min(ranked) else array_max(ranked)
+      // explode, not a Filter on the winner: the optimizer pushes a
+      // Filter below this projection with the alias inlined, so the
+      // lookup and the ranking would run twice per arrival
+      queries.select(col("qid"), explode(array_compact(array(winner))).as("top"))
+    } else
+      queries
+        // +1 day: keep every stamp strictly above the epoch-0 initial
+        // watermark (see sNeardupGate)
+        .withColumn("ts", timestamp_seconds(col("qid") + lit(86400L)))
+        .withWatermark("ts", "1 minute")
+        .withColumn("cell", explode(cells))
+        .join(corpus, Seq("cell"))
+        .filter(col("vec_id") =!= col("qid"))
+        .groupBy(window(col("ts"), "1 minute"), col("qid"))
+        .agg({
+          val rank = rerank.rank(col("vec_id"), col(rerank.payload))
+          if (rerank.lowest) min(rank) else max(rank)
+        }.as("top"))
+    top.select(col("qid") +: rerank.out(col("top")): _*)
+  }
+
+  /** Drive one serve query through the staggered feed of `queries`
+    * into a memory table and return it: append mode for the stateless
+    * map-side plan, update mode for the keyed one. */
+  private def runServe(s: SparkSession, rig: String, queries: Seq[VecEvent],
+      mapSide: Boolean)(plan: DataFrame => DataFrame): DataFrame = {
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    EventPairing.withStreamingPartitions(s) {
+      val input = MemoryStream[VecEvent]
+      val name = s"${rig}_${nameCounter.incrementAndGet()}"
+      val q = withLazyEviction(s) {
+        plan(input.toDF()).writeStream.format("memory").queryName(name)
+          .outputMode(if (mapSide) "append" else "update").start()
+      }
+      try {
+        feedStaggered(input, queries.sortBy(_.vec_id), q)
+        record(rig, q)
+      } finally q.stop()
+      s.table(name)
+    }
   }
 
   /** s_swap_inflight — the swap of [[sIndexSwap]] with queries IN
@@ -910,10 +958,12 @@ object StreamingIndex {
     * timeline keeps every arrival ahead of the carried watermark —
     * an interleaved split would silently late-drop in-flight queries
     * behind v1's final watermark (exactly the bug class this rig
-    * exists to pin). State schema is unchanged across the restart
-    * (same agg, same key), which is what Spark requires of a
-    * checkpoint-compatible upgrade; the upstream literal/static-side
-    * swap is the allowed kind of plan change. Oracle: v1's chain
+    * exists to pin). Both phases take ONE size-gate regime
+    * ([[serveMapSide]] must admit both pins for the map-side plan), so
+    * the restart never changes the state schema — none under the
+    * ceiling, the same windowed agg and key above it — which is what
+    * Spark requires of a checkpoint-compatible upgrade; the upstream
+    * literal/static-side swap is the allowed kind of plan change. Oracle: v1's chain
     * answers the first third, v2's chain the rest — both training
     * chains replayed in one DuckDB query (the s_index_swap CTE with a
     * thirds split). */
@@ -923,7 +973,11 @@ object StreamingIndex {
     val panel = vecPanel(s, d)
     val (cenA, cellsA) = Similarity.preArrivalIndex(s, d)
     val (cenB, cellsB) = Similarity.ivfIndex(s, d)
-    val ordered = panel.toSeq.sortBy(_.vec_id).zipWithIndex
+    val corpusA = servingCorpus(s, d, cellsA, "serve_pre")
+    val corpusB = servingCorpus(s, d, cellsB, "serve")
+    val mapSide = serveMapSide(s, d, "serve_pre", corpusA) &&
+      serveMapSide(s, d, "serve", corpusB)
+    val ordered = panel.sortBy(_.vec_id).zipWithIndex
     val np = ordered.size
     // contiguous rank thirds: t0 served by v1; t1 arrives during the
     // swap window (in flight); t2 arrives after v2 is up. 1-based rank
@@ -943,16 +997,16 @@ object StreamingIndex {
         .createTempDirectory("graft_swap_inflight_v1").toString
       val out2 = java.nio.file.Files
         .createTempDirectory("graft_swap_inflight_v2").toString
-      def startPhase(cenTag: String, cen: => DataFrame, corpus: DataFrame,
-          outDir: String) =
+      def startPhase(cenTag: String, cen: => DataFrame, variant: String,
+          corpus: DataFrame, outDir: String) =
         withLazyEviction(s) {
-          serveTop1Plan(s, input.toDF(), d, cenTag, cen, corpus)
+          serveTop1Plan(s, input.toDF(), d, cenTag, cen, variant, corpus, mapSide)
             .writeStream
             .foreachBatch { (batch: DataFrame, _: Long) =>
               batch.write.mode("append").parquet(outDir)
             }
             .option("checkpointLocation", ckpt)
-            .outputMode("update").start()
+            .outputMode(if (mapSide) "append" else "update").start()
         }
       def readPhase(version: Int, outDir: String): DataFrame = {
         val parts = Option(new java.io.File(outDir)
@@ -965,8 +1019,7 @@ object StreamingIndex {
           col("qid"), col("vec_id"), col("cos_sim"))
       }
       try {
-        val q1 = startPhase("ivf_pre", cenA,
-          servingCorpus(s, d, cellsA, "serve_pre"), out1)
+        val q1 = startPhase("ivf_pre", cenA, "serve_pre", corpusA, out1)
         // v1's data-carrying batches enter the serving telemetry too —
         // the rig_setup/serving split in Bench reads batchDurationsMs,
         // and without this record the v1 phase's per-batch serving time
@@ -979,8 +1032,7 @@ object StreamingIndex {
         // the swap window: no serving query is up; these queries sit in
         // the source past v1's last committed offset
         input.addData(t1)
-        val q2 = startPhase("ivf", cenB,
-          servingCorpus(s, d, cellsB, "serve"), out2)
+        val q2 = startPhase("ivf", cenB, "serve", corpusB, out2)
         try {
           q2.processAllAvailable() // v2's first batches drain the in-flight block
           feedStaggered(input, t2, q2)
@@ -1099,27 +1151,23 @@ object StreamingIndex {
     * centroid_id ASC) runs MAP-SIDE against the literal-inlined
     * trained centroids ([[sAnnServe]]'s serving-RAM move); the
     * query's ADC distance table — its integer d2 to all ≤128 (sub,
-    * code) centroids, unrolled to codegen arithmetic over the literal
-    * codebook exactly like [[mapSideCodes]] — is computed ONCE per
-    * event as an array of per-subspace maps; candidates come from the
-    * stream-static equi-join on the probed cell (cell-partitioned
-    * coded corpus → one partition read per probe); and each
-    * candidate's distance is the SUM OF 8 MAP LOOKUPS against its
-    * static 8-byte code row — the corpus's floats are never touched.
-    * The top-1 rerank (dist ASC, vec_id ASC via min-of-struct) is the
-    * single stateful aggregation, update mode — WINDOWED on the
-    * query's arrival stamp under a watermark like [[sAnnServe]], so
-    * per-query state expires instead of accumulating for the life of
-    * the serving process (the window key changes no emitted row: one
-    * qid, one window). Fully oracled: the
-    * shared IVF + PQ + composed-ADC CTEs replay probe, table, and
-    * ranking — every distance an exact integer. */
+    * code) centroids over the literal codebook — is computed ONCE per
+    * event as an array of per-subspace maps; and each candidate's
+    * distance is the SUM OF 8 MAP LOOKUPS against its static 8-byte
+    * code row — the corpus's floats are never touched. The top-1
+    * (dist ASC, vec_id ASC via min-of-struct) over the probed cells'
+    * coded candidates is [[sAnnServe]]'s size-gated shape: map-side
+    * against the once-per-pin [[CellMap]] of code rows under the
+    * ceiling (stateless, append), the stream-static equi-join on the
+    * probed cell plus the watermarked windowed min above it (per-query
+    * state expires instead of accumulating for the life of the
+    * serving process). Fully oracled: the shared IVF + PQ +
+    * composed-ADC CTEs replay probe, table, and ranking — every
+    * distance an exact integer. */
   def sIvfPqServe(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val (cen, cells) = Similarity.ivfIndex(s, d)
     val (cb, codes) = ProductQuant.pqIndex(s, d)
-    val cenRows: Seq[(Long, Seq[Double])] = cenLiterals(s, d, "ivf", cen)
     val cbRows: Seq[(Int, Long, Seq[Long])] =
       pinnedFeed(s, d, "feed_cb_pq") {
         cb.select(col("sub").cast("int"), col("code"), col("c"))
@@ -1130,10 +1178,8 @@ object StreamingIndex {
         sb -> rs.map(r => (r._2, r._3))
       }
     // static serving relation: (vec_id, cell, codes_arr[8]) — the coded
-    // corpus, 8 small ints per vector plus its partition key.
-    // pinned: the coded corpus is the serving dataset — rebuilding the
-    // per-vector code rows (a corpus-wide groupBy) EVERY micro-batch
-    // is the cost the pin removes ([[sAnnServe]])
+    // corpus, 8 small ints per vector plus its partition key, pinned
+    // once per (session, corpus) like [[sAnnServe]]'s
     val corpus = pinnedCorpus(s, d, "pq_coded",
       cells.queryExecution.logical.semanticHash().toString + ":" +
         codes.queryExecution.logical.semanticHash().toString) {
@@ -1144,116 +1190,114 @@ object StreamingIndex {
         .select(col("vec_id"), col("cell"),
           transform(array_sort(col("pv")), p => p.getField("code")).as("codes_arr"))
     }
-    val panel = vecPanel(s, d)
-    EventPairing.withStreamingPartitions(s) {
-      val input = MemoryStream[VecEvent]
-      // per-event ADC table: array over subs of map(code -> integer d2).
-      // Compact HOF form over the literal codebook — see [[mapSideCodes]]
-      // for why tree size (per-trigger replan cost), not per-row speed,
-      // is the binding constraint at serving cadence.
-      val dtable = array((0 until ProductQuant.Subs).map { sb =>
-        val cands = typedlit(bySub(sb).sortBy(_._1))
-        map_from_arrays(
-          transform(cands, c => c.getField("_1")),
-          transform(cands, c => subD2(sb, c.getField("_2"))))
-      }: _*)
-      val probed = input.toDF()
-        .select(col("vec_id").as("qid"),
-          transform(col("embedding"),
-            x => round(x.cast("double") * 1e6).cast("long")).as("xs"),
-          col("embedding").as("qvec"),
-          // +1 day: keep every stamp strictly above the epoch-0
-          // initial watermark (see sNeardupGate)
-          timestamp_seconds(col("vec_id") + lit(86400L)).as("ts"))
-        .withWatermark("ts", "1 minute")
-        .withColumn("pcells", slice(array_sort(transform(typedlit(cenRows), c =>
-          struct(
-            (-Similarity.cosine(col("qvec"), c.getField("_2"))).as("negcos"),
-            c.getField("_1").as("cid")))), 1, 2))
-        .select(col("qid"), col("xs"), col("ts"), dtable.as("dt"),
-          explode(transform(col("pcells"), p => p.getField("cid"))).as("cell"))
-      val served = probed
-        .join(gatedServeCorpus(s, d, "pq_coded", corpus), Seq("cell"))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("dist",
-          (0 until ProductQuant.Subs).map { sb =>
-            element_at(col("dt").getItem(sb), col("codes_arr").getItem(sb))
-          }.reduce(_ + _))
-        .groupBy(window(col("ts"), "1 minute"), col("qid"))
-        .agg(min(struct(col("dist"), col("vec_id"))).as("top"))
-        .select(col("qid"), col("top.vec_id").as("vec_id"),
-          col("top.dist").as("dist"))
-      val name = s"s_ivfpq_serve_${nameCounter.incrementAndGet()}"
-      val q = withLazyEviction(s) {
-        served.writeStream.format("memory").queryName(name)
-          .outputMode("update").start()
-      }
-      try {
-        feedStaggered(input, panel.toSeq.sortBy(_.vec_id), q)
-        record("s_ivfpq_serve", q)
-      } finally q.stop()
-      s.table(name).orderBy("qid")
-    }
+    // per-event ADC table: array over subs of map(code -> integer d2).
+    // Compact HOF form over the literal codebook — see [[mapSideCodes]]
+    // for why tree size (per-trigger replan cost), not per-row speed,
+    // is the binding constraint at serving cadence.
+    val dtable = array((0 until ProductQuant.Subs).map { sb =>
+      val cands = typedlit(bySub(sb).sortBy(_._1))
+      map_from_arrays(
+        transform(cands, c => c.getField("_1")),
+        transform(cands, c => subD2(sb, c.getField("_2"))))
+    }: _*)
+    val adc = Rerank[Array[Long]]("codes_arr", _.getSeq[Long](2).toArray,
+      _.withColumn("xs", transform(col("qvec"),
+          x => round(x.cast("double") * 1e6).cast("long")))
+        .withColumn("dt", dtable),
+      (id, codes) => struct(
+        (0 until ProductQuant.Subs).map { sb =>
+          element_at(col("dt").getItem(sb), codes.getItem(sb))
+        }.reduce(_ + _).as("dist"),
+        id.as("vec_id")),
+      lowest = true,
+      top => Seq(top.getField("vec_id").as("vec_id"), top.getField("dist").as("dist")))
+    val mapSide = serveMapSide(s, d, "pq_coded", corpus)
+    runServe(s, "s_ivfpq_serve", vecPanel(s, d), mapSide)(
+      serveTop1Plan(s, _, d, "ivf", cen, "pq_coded", corpus, mapSide, nProbe = 2, adc))
+      .orderBy("qid")
   }
 
   /** s_neardup_gate — streaming near-duplicate admission gate: each
     * arriving document computes its md5-MinHash band keys MAP-SIDE
-    * ([[Dedup.md5BandProbes]] — the per-event form of the batch
+    * ([[Dedup.md5BandArrays]] — the per-event form of the batch
     * signature, value-identical) and probes the corpus band index
     * ([[Dedup.md5BandIndex]]); any band collision with a DIFFERENT
     * existing doc flags the arrival as a near-dup candidate before it
     * is admitted to the corpus. Emitted rows are the (arrival,
-    * existing) candidate pairs, deduplicated across bands by a
-    * streaming dropDuplicatesWithinWatermark over the arrival stamp —
-    * the one stateful operator; its state is O(candidate pairs WITHIN
-    * THE WATERMARK), not O(corpus) and not O(stream lifetime): a pair
-    * seen once is suppressed for the watermark delay (band collisions
-    * of one arrival land in one micro-batch, so the dedup window only
-    * needs to span an arrival's own bands) and its state then expires
-    * — the round-6 plain dropDuplicates kept every pair forever. The
-    * band-index join side is SIZE-GATED ([[neardupCandidatePairs]]):
-    * under [[NeardupBroadcastMaxDocs]] corpus docs the sketch
-    * broadcasts (every executor screens arrivals with zero per-batch
-    * shuffle); at 100 TB the hint is withheld and the plan becomes a
-    * shuffled equi-join sharded by band_key — an unconditional
-    * broadcast would ship the whole corpus sketch to every executor,
-    * an OOM rather than a plan choice. The above-ceiling plan the
-    * micro-batch actually picks broadcasts the per-batch PROBE side
-    * into the sharded corpus, so the gate's Zipf-hot band keys (its
-    * target population is duplicate-heavy by definition) never
-    * serialize into one task — measured, with the salted fallback for
-    * the giant-batch corner where a key-partitioned join would
-    * materialize ([[NeardupSaltBuckets]], NEARDUP_SKEW.json). Oracle:
-    * the symmetric band-collision pairs replayed in DuckDB over the
-    * same portable md5 hash family. */
-  def sNeardupGate(s: SparkSession, d: String): DataFrame = {
+    * existing) candidate pairs, size-gated ([[neardupGatePlan]]):
+    *  - under [[NeardupBroadcastMaxDocs]] corpus docs, ONE map-side
+    *    lookup of the arrival's band array against the once-per-pin
+    *    sketch map returns its sorted distinct dup ids — a stateless
+    *    projection, append mode with no watermark: no join, no
+    *    Exchange, no state store;
+    *  - above it the hint is withheld and the plan becomes a shuffled
+    *    equi-join sharded by band_key (an unconditional broadcast
+    *    would ship the whole corpus sketch to every executor, an OOM
+    *    rather than a plan choice), with the per-band pairs collapsed
+    *    by a dropDuplicatesWithinWatermark over the arrival stamp —
+    *    state O(candidate pairs WITHIN THE WATERMARK), never O(corpus)
+    *    or O(stream lifetime). The above-ceiling plan the micro-batch
+    *    actually picks broadcasts the per-batch PROBE side into the
+    *    sharded corpus, so the gate's Zipf-hot band keys never
+    *    serialize into one task — measured, with the salted fallback
+    *    for the giant-batch corner ([[NeardupSaltBuckets]],
+    *    NEARDUP_SKEW.json).
+    * RE-ARRIVAL CONTRACT under the ceiling: emission is per ARRIVAL —
+    * a doc_id that arrives again (a re-send, in a later batch) emits
+    * its distinct pairs again, once per arrival. Above the ceiling the
+    * watermarked dedup keys on (doc_id, dup_id), so a re-arrival
+    * inside the watermark emits nothing (spec-pinned in both regimes).
+    * The rig feeds each doc once, so both regimes emit the same rows.
+    * Oracle: the symmetric band-collision pairs replayed in DuckDB over
+    * the same portable md5 hash family. */
+  def sNeardupGate(s: SparkSession, d: String): DataFrame =
+    neardupGate(s, d, "s_neardup_gate",
+      Dedup.md5BandIndex(s, d, graft.operators.IndexStore.BandK),
+      docEvents(s, d).length.toLong, d, "band_gate")
+
+  /** The near-dup gate's per-arrival plan over `arrivals` (doc_id,
+    * text): map-side and stateless under the ceiling, the keyed join
+    * plus watermarked (doc_id, dup_id) dedup above it — see
+    * [[sNeardupGate]]. Append mode in both regimes. `corpus`, `nDocs`
+    * and `dir` are [[neardupCandidatePairs]]'s; `mapVariant` keys the
+    * once-per-pin band map. */
+  private[graft] def neardupGatePlan(s: SparkSession, d: String,
+      arrivals: DataFrame, corpus: DataFrame, nDocs: Long, dir: String,
+      mapVariant: String): DataFrame = {
+    val probes = Dedup.md5BandArrays(
+      arrivals.select(col("doc_id"), split(col("text"), " ").as("tk")),
+      graft.operators.IndexStore.BandK)
+    val pairs = neardupCandidatePairs(s, probes, corpus, nDocs, dir,
+      Some(() => pinnedBandMap(s, d, mapVariant, corpus)))
+    if (nDocs <= neardupLimit(s)) pairs
+    else pairs
+      // +1 day: the initial watermark is epoch 0 and the late-row
+      // filter drops rows AT the watermark, so a doc_id-0 arrival
+      // stamped exactly at epoch 0 would silently vanish
+      .withColumn("ts", timestamp_seconds(col("doc_id") + lit(86400L)))
+      .withWatermark("ts", "10 minutes")
+      .dropDuplicatesWithinWatermark("doc_id", "dup_id")
+      .select(col("doc_id"), col("dup_id"))
+  }
+
+  /** Drive a near-dup gate rig: every corpus doc arrives once, through
+    * the staggered feed, into a memory table. */
+  private def neardupGate(s: SparkSession, d: String, rig: String,
+      corpus: DataFrame, nDocs: Long, dir: String, mapVariant: String): DataFrame = {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val k = graft.operators.IndexStore.BandK
-    val corpus = Dedup.md5BandIndex(s, d, k)
     val docs = docEvents(s, d)
     EventPairing.withStreamingPartitions(s) {
       val input = MemoryStream[DocEvent]
-      val probes = Dedup.md5BandProbes(
-        input.toDF().select(col("doc_id"), split(col("text"), " ").as("tk")), k)
-      val gated = neardupCandidatePairs(s, probes, corpus, docs.length.toLong, d,
-        Some(() => pinnedKeyedMap(s, d, "band_gate",
-          corpus.select(bandMapKey, col("doc_id")))))
-        // +1 day: the initial watermark is epoch 0 and the late-row
-        // filter drops rows AT the watermark, so a doc_id-0 arrival
-        // stamped exactly at epoch 0 would silently vanish
-        .withColumn("ts", timestamp_seconds(col("doc_id") + lit(86400L)))
-        .withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark("doc_id", "dup_id")
-        .select(col("doc_id"), col("dup_id"))
-      val name = s"s_neardup_gate_${nameCounter.incrementAndGet()}"
+      val name = s"${rig}_${nameCounter.incrementAndGet()}"
       val q = withLazyEviction(s) {
-        gated.writeStream.format("memory").queryName(name)
+        neardupGatePlan(s, d, input.toDF(), corpus, nDocs, dir, mapVariant)
+          .writeStream.format("memory").queryName(name)
           .outputMode("append").start()
       }
       try {
-        feedStaggered(input, docs.toSeq.sortBy(_.doc_id), q)
-        record("s_neardup_gate", q)
+        feedStaggered(input, docs.sortBy(_.doc_id), q)
+        record(rig, q)
       } finally q.stop()
       s.table(name).orderBy("doc_id", "dup_id")
     }
@@ -1285,7 +1329,7 @@ object StreamingIndex {
   private[graft] def substringCandidatePairs(
       s: SparkSession, probes: DataFrame, corpus: DataFrame, nPostings: Long,
       dir: String = "",
-      postingMap: Option[() => org.apache.spark.broadcast.Broadcast[PostingMap]] = None): DataFrame = {
+      postingMap: Option[() => Broadcast[PostingMap]] = None): DataFrame = {
     val limit = s.conf.getOption("graft.substring.broadcastMaxPostings")
       .map(_.toLong).getOrElse(SubstringBroadcastMaxPostings)
     val cond = col("s.h") === col("c.h") &&
@@ -1387,9 +1431,10 @@ object StreamingIndex {
     * ([[Corpus.gramIndex]]); an exact-text gram collision with a
     * DIFFERENT existing doc flags the arrival. Emitted rows are the
     * (arrival, existing) candidate pairs, deduplicated across an
-    * arrival's own grams by the same watermark-bounded
-    * dropDuplicatesWithinWatermark state the near-dup gate uses
-    * (state is O(pairs within the watermark), never O(corpus)). The
+    * arrival's own grams by the watermark-bounded
+    * dropDuplicatesWithinWatermark state the near-dup gate keeps above
+    * its ceiling (state is O(pairs within the watermark), never
+    * O(corpus)). The
     * index side is SIZE-GATED ([[substringCandidatePairs]]): under
     * [[SubstringBroadcastMaxPostings]] the postings broadcast (zero
     * per-batch shuffle); above it the per-batch probe side broadcasts
@@ -1569,40 +1614,15 @@ object StreamingIndex {
     * collisions of all arrivals against the base ∪ admitted md5-band
     * chain (the shared admission CTEs). */
   def sNeardupGateUpd(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val k = graft.operators.IndexStore.BandK
     val corpus = pinnedCorpus(s, d, "band_upd") {
       graft.operators.IndexStore.durableBandUpd(s, d)
         .select(col("doc_id"), col("band"), col("band_key"))
     }
     val nDocs = pinnedCount(s, d, "n_band_upd")(
       corpus.select(col("doc_id")).distinct().count())
-    val docs = docEvents(s, d)
-    EventPairing.withStreamingPartitions(s) {
-      val input = MemoryStream[DocEvent]
-      val probes = Dedup.md5BandProbes(
-        input.toDF().select(col("doc_id"), split(col("text"), " ").as("tk")), k)
-      // dir = "" on purpose: the corpus relation IS the updated table
-      // (see sSubstringGateUpd)
-      val gated = neardupCandidatePairs(s, probes, corpus, nDocs, "",
-        Some(() => pinnedKeyedMap(s, d, "band_upd",
-          corpus.select(bandMapKey, col("doc_id")))))
-        .withColumn("ts", timestamp_seconds(col("doc_id") + lit(86400L)))
-        .withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark("doc_id", "dup_id")
-        .select(col("doc_id"), col("dup_id"))
-      val name = s"s_neardup_gate_upd_${nameCounter.incrementAndGet()}"
-      val q = withLazyEviction(s) {
-        gated.writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-      }
-      try {
-        feedStaggered(input, docs.toSeq.sortBy(_.doc_id), q)
-        record("s_neardup_gate_upd", q)
-      } finally q.stop()
-      s.table(name).orderBy("doc_id", "dup_id")
-    }
+    // dir = "" on purpose: the corpus relation IS the updated table
+    // (see sSubstringGateUpd)
+    neardupGate(s, d, "s_neardup_gate_upd", corpus, nDocs, "", "band_upd")
   }
 
   /** s_neardup_gate_upd2 — [[sSubstringGateUpd2]]'s sketch-tier twin:
@@ -1612,39 +1632,14 @@ object StreamingIndex {
     * symmetric band collisions of all arrivals against the
     * base ∪ a₁ ∪ a₂ md5-band chain (the chained admission CTEs). */
   def sNeardupGateUpd2(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val k = graft.operators.IndexStore.BandK
     val corpus = pinnedCorpus(s, d, "band_upd2") {
       graft.operators.IndexStore.durableBandUpd2(s, d)
         .select(col("doc_id"), col("band"), col("band_key"))
     }
     val nDocs = pinnedCount(s, d, "n_band_upd2")(
       corpus.select(col("doc_id")).distinct().count())
-    val docs = docEvents(s, d)
-    EventPairing.withStreamingPartitions(s) {
-      val input = MemoryStream[DocEvent]
-      val probes = Dedup.md5BandProbes(
-        input.toDF().select(col("doc_id"), split(col("text"), " ").as("tk")), k)
-      // dir = "" on purpose: the corpus relation IS the updated2 table
-      val gated = neardupCandidatePairs(s, probes, corpus, nDocs, "",
-        Some(() => pinnedKeyedMap(s, d, "band_upd2",
-          corpus.select(bandMapKey, col("doc_id")))))
-        .withColumn("ts", timestamp_seconds(col("doc_id") + lit(86400L)))
-        .withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark("doc_id", "dup_id")
-        .select(col("doc_id"), col("dup_id"))
-      val name = s"s_neardup_gate_upd2_${nameCounter.incrementAndGet()}"
-      val q = withLazyEviction(s) {
-        gated.writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-      }
-      try {
-        feedStaggered(input, docs.toSeq.sortBy(_.doc_id), q)
-        record("s_neardup_gate_upd2", q)
-      } finally q.stop()
-      s.table(name).orderBy("doc_id", "dup_id")
-    }
+    // dir = "" on purpose: the corpus relation IS the updated2 table
+    neardupGate(s, d, "s_neardup_gate_upd2", corpus, nDocs, "", "band_upd2")
   }
 
   /** The (arrival, existing) EXACT-duplicate pairs for
@@ -1665,7 +1660,7 @@ object StreamingIndex {
     * rows. */
   private[graft] def exactCandidatePairs(
       s: SparkSession, probes: DataFrame, corpus: DataFrame, nDocs: Long,
-      md5Map: Option[() => org.apache.spark.broadcast.Broadcast[KeyedDocsMap]] = None): DataFrame = {
+      md5Map: Option[() => Broadcast[KeyedDocsMap]] = None): DataFrame = {
     val limit = s.conf.getOption("graft.exact.broadcastMaxDocs")
       .orElse(s.conf.getOption("graft.neardup.broadcastMaxDocs"))
       .map(_.toLong).getOrElse(NeardupBroadcastMaxDocs)
@@ -1820,6 +1815,8 @@ object StreamingIndex {
         def tsCol: org.apache.spark.sql.Column =
           timestamp_seconds(lit(86400L) +
             expr(s"doc_id div $rb") * lit(span) + pmod(col("doc_id"), lit(rb)))
+        def md5Map = pinnedKeyedMap(s, d, s"md5_$tierTag")(
+          KeyedDocsMap.of(md5Idx.select(col("h"), col("doc_id"))))
         val (_, zFp) = graft.operators.TextAnalysis.logitZ
         val quality = arr.select(col("doc_id"), zFp.as("z_fp"))
           .filter(col("z_fp") < 0)
@@ -1827,8 +1824,7 @@ object StreamingIndex {
         val exact = exactCandidatePairs(s,
           arr.select(col("doc_id"), md5(col("text").cast("binary")).as("h")),
           md5Idx, nDocs,
-          Some(() => pinnedKeyedMap(s, d, s"md5_$tierTag",
-            md5Idx.select(col("h"), col("doc_id")))))
+          Some(() => md5Map))
           .select(col("doc_id"), lit("exact").as("reason"))
         val substr = substringCandidatePairs(s,
           graft.operators.Corpus.gramRows(
@@ -1839,11 +1835,10 @@ object StreamingIndex {
           Some(() => pinnedPostingMap(s, d, gramVariant, gramIdx)))
           .select(col("doc_id"), lit("substring").as("reason"))
         val near = neardupCandidatePairs(s,
-          Dedup.md5BandProbes(
+          Dedup.md5BandArrays(
             arr.select(col("doc_id"), split(col("text"), " ").as("tk")), k),
           bandIdx, nDocs, innerDir,
-          Some(() => pinnedKeyedMap(s, d, s"band_$tierTag",
-            bandIdx.select(bandMapKey, col("doc_id")))))
+          Some(() => pinnedBandMap(s, d, s"band_$tierTag", bandIdx)))
           .select(col("doc_id"), lit("neardup").as("reason"))
         val fourLegs = quality.unionByName(exact)
           .unionByName(substr).unionByName(near)
@@ -1865,8 +1860,7 @@ object StreamingIndex {
             md5(col("text").cast("binary")).as("key"), tsCol.as("ts"))
             .withWatermark("ts", "10 minutes")
           if (nDocs <= exactLimit) {
-            val bc = pinnedKeyedMap(s, d, s"md5_$tierTag",
-              md5Idx.select(col("h"), col("doc_id")))
+            val bc = md5Map
             val known = udf((k: String) => bc.value.contains(k))
             base.filter(!known(col("key")))
           } else

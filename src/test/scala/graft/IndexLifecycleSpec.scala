@@ -263,10 +263,43 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(graft.streaming.StreamingIndex.stateOpNames.get("s_vector_ingest").isEmpty)
   }
 
-  test("serve/gate state is WATERMARK-BOUNDED: windowed aggs and watermarked dedup") {
-    for (q <- Seq("s_ann_serve", "s_ivfpq_serve", "s_filtered_serve", "s_neardup_gate"))
+  /** Run `body` in the ABOVE-ceiling regime of the serve and gate
+    * rigs (both size-gate ceilings at 0): the keyed joins with their
+    * windowed top-1 / watermarked dedup — where their state lives. */
+  private def aboveCeiling[T](body: => T): T = {
+    spark.conf.set("graft.serve.broadcastMaxVectors", "0")
+    spark.conf.set("graft.neardup.broadcastMaxDocs", "0")
+    try body
+    finally {
+      spark.conf.unset("graft.serve.broadcastMaxVectors")
+      spark.conf.unset("graft.neardup.broadcastMaxDocs")
+    }
+  }
+
+  test("serve/gate under the ceiling: stateless micro-batches — zero state rows, no state operator") {
+    // under the size-gate ceilings every serve and gate rig answers an
+    // arrival map-side against its once-per-pin broadcast index (the
+    // s_vector_ingest guard applied to the serve/gate family): no
+    // state operator may run, not just an empty store. stateRowsTotal
+    // keeps the max over runs, so drop what earlier specs recorded.
+    val rigs = Seq("s_ann_serve", "s_ivfpq_serve", "s_filtered_serve",
+      "s_index_swap", "s_swap_inflight", "s_neardup_gate")
+    for (q <- rigs) {
+      graft.streaming.StreamingIndex.stateRowsTotal.remove(q)
       SparkEntry.queries(q)(spark, sf("sf0.001"))
         .write.format("noop").mode("overwrite").save()
+      assert(graft.streaming.StreamingIndex.stateRowsTotal.get(q) == 0L, q)
+      assert(graft.streaming.StreamingIndex.stateOpNames.get(q).isEmpty, q)
+    }
+  }
+
+  test("serve/gate state is WATERMARK-BOUNDED: windowed aggs and watermarked dedup") {
+    // above the ceilings (under them no state exists at all — see the
+    // zero-state guard), emitting the same rows as the map-side plans
+    val rigs = Seq("s_ann_serve", "s_ivfpq_serve", "s_filtered_serve", "s_neardup_gate")
+    def rows(q: String) = SparkEntry.queries(q)(spark, sf("sf0.001")).collect().toSeq
+    val mapSide = rigs.map(rows)
+    assert(aboveCeiling(rigs.map(rows)) == mapSide)
     // the serve paths' only state is the windowed per-(window, qid)
     // top-1 aggregation — expires when the watermark passes the window
     assert(graft.streaming.StreamingIndex.stateOpNames.get("s_ann_serve")
@@ -291,10 +324,13 @@ class IndexLifecycleSpec extends SparkSpec {
     // source, so eviction rides the next DATA batch), which means the
     // series has no trailing eviction-only batch: the watermark-bounded
     // property is the PEAK bound plus eviction actually firing, not an
-    // end-of-run decay to empty.
-    for (q <- Seq("s_ann_serve", "s_ivfpq_serve", "s_filtered_serve"))
-      SparkEntry.queries(q)(spark, sf("sf0.001"))
-        .write.format("noop").mode("overwrite").save()
+    // end-of-run decay to empty. State exists only above the serve
+    // ceiling (the keyed join's windowed top-1), so run there.
+    aboveCeiling {
+      for (q <- Seq("s_ann_serve", "s_ivfpq_serve", "s_filtered_serve"))
+        SparkEntry.queries(q)(spark, sf("sf0.001"))
+          .write.format("noop").mode("overwrite").save()
+    }
     for (q <- Seq("s_ann_serve", "s_ivfpq_serve", "s_filtered_serve")) {
       val removed = graft.streaming.StreamingIndex.stateRowsRemoved.get(q)
       val series = graft.streaming.StreamingIndex.stateRowsSeries.get(q)
@@ -584,7 +620,8 @@ class IndexLifecycleSpec extends SparkSpec {
   test("s_neardup_gate: the band index side is SIZE-GATED — map probe under the ceiling, corpus never the build side above it") {
     import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
     import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
     // the corpus sketch is a localCheckpoint'ed relation — it shows up
     // in the executed plan as the one RDD scan; "corpus broadcast" ≡
     // that scan sits under a broadcast join's BUILD side
@@ -609,6 +646,13 @@ class IndexLifecycleSpec extends SparkSpec {
       smallPlan.toString)
     assert(!corpusIsBuildSide(smallPlan), smallPlan.toString)
     assert(smallPlan.toString.contains("Generate explode(UDF("),
+      smallPlan.toString)
+    // one lookup per arrival answers its distinct pairs, so the
+    // micro-batch carries no shuffle and no join of any kind (the
+    // cross-band dedup and its Exchange are gone with the state)
+    assert(smallPlan.collectFirst { case e: Exchange => e }.isEmpty,
+      smallPlan.toString)
+    assert(smallPlan.collectFirst { case j: BaseJoinExec => j }.isEmpty,
       smallPlan.toString)
     // force the 100 TB branch: above the ceiling the hint must be
     // WITHHELD — an unconditional broadcast ships the whole corpus
@@ -656,10 +700,11 @@ class IndexLifecycleSpec extends SparkSpec {
     }
   }
 
-  test("s_ann_serve: the static serving corpus is SIZE-GATED into the per-trigger join — broadcast build side under the ceiling, hint withheld above it") {
+  test("s_ann_serve: the static serving corpus is SIZE-GATED — map-side probe under the ceiling, hint withheld above it") {
     import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
     import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
     // the pinned serving corpus is the plan's one RDD scan; "corpus
     // broadcasts" ≡ that scan sits under a broadcast join's BUILD side
     def corpusIsBuildSide(p: SparkPlan): Boolean = p.collect {
@@ -671,15 +716,20 @@ class IndexLifecycleSpec extends SparkSpec {
         build.collectFirst { case r: RDDScanExec => r }.isDefined
     }.exists(identity)
     val d = sf("sf0.001")
-    // UNDER the gate (spec scale): the static side must be the broadcast
-    // build — before r16 the stats-free localCheckpoint pin fell to a
-    // SortMergeJoin that re-shuffled + re-sorted the whole corpus every
-    // micro-batch (plans/r16/s_ann_serve_join_before.txt)
+    // UNDER the gate (spec scale): every arrival is answered map-side
+    // against the once-per-pin broadcast cell map — the executed
+    // micro-batch has no Exchange, no join, and no scan of the pinned
+    // corpus (before r16 the stats-free pin fell to a SortMergeJoin
+    // that re-shuffled the whole corpus every micro-batch; after it, a
+    // per-trigger BroadcastExchange rebuilt the corpus every batch)
     val small = SparkEntry.queries("s_ann_serve")(spark, d)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSeq
     val smallPlan = graft.streaming.StreamingIndex.lastExec.get("s_ann_serve")
-    assert(corpusIsBuildSide(smallPlan), smallPlan.toString)
-    assert(smallPlan.collectFirst { case j: SortMergeJoinExec => j }.isEmpty,
+    assert(smallPlan.collectFirst { case e: Exchange => e }.isEmpty,
+      smallPlan.toString)
+    assert(smallPlan.collectFirst { case j: BaseJoinExec => j }.isEmpty,
+      smallPlan.toString)
+    assert(smallPlan.collectFirst { case r: RDDScanExec => r }.isEmpty,
       smallPlan.toString)
     // ABOVE the gate the hint must be WITHHELD — an unconditional
     // broadcast ships the full serving corpus to every executor at
@@ -733,6 +783,101 @@ class IndexLifecycleSpec extends SparkSpec {
     }
   }
 
+  test("map-side serve top-1 boundaries: cos tie to the lower vec_id, lone query silent, never itself, second probed cell can win") {
+    import graft.streaming.StreamingIndex
+    // 2-dim crafted index: centroids 10 → [1,0], 20 → [0,1], 30 → [-1,0]
+    // and a hand-assigned corpus — cell 10: v3 [2,2] and v5 [1,1] (the
+    // same direction: EXACTLY equal cos to any query), cell 20: v8
+    // [1,0.5], cell 30: v7 [-1,0.1] alone
+    val cen = Seq((10L, Seq(1.0, 0.0)), (20L, Seq(0.0, 1.0)), (30L, Seq(-1.0, 0.0)))
+      .toDF("centroid_id", "cvec")
+    val corpus = Seq((3L, Seq(2f, 2f), 10L), (5L, Seq(1f, 1f), 10L),
+      (8L, Seq(1f, 0.5f), 20L), (7L, Seq(-1f, 0.1f), 30L))
+      .toDF("vec_id", "embedding", "cell")
+    // queries: 100 and 200 probe cell 10 first; 3 is the corpus vector
+    // itself (its centroid cos ties 10/20 → lower id 10); 7 is alone in
+    // its cell 30
+    val queries = Seq((100L, Seq(1f, 0.2f)), (3L, Seq(2f, 2f)),
+      (7L, Seq(-1f, 0.1f)), (200L, Seq(1f, 0.5f))).toDF("vec_id", "embedding")
+    val d = fixtureDir("embeddings" -> corpus)
+    def serve(nProbe: Int): Seq[(Long, Long, Double)] = {
+      val mapSide = StreamingIndex.serveMapSide(spark, d, "fixture", corpus)
+      StreamingIndex.serveTop1Plan(spark, queries, d, "fixture", cen, "fixture",
+        corpus, mapSide, nProbe).orderBy("qid").as[(Long, Long, Double)].collect().toSeq
+    }
+    val one = serve(1)
+    // 100, 200 → the v3/v5 tie goes to the LOWER vec_id 3; 3 never
+    // answers itself (its own cos-1.0, lower-id twin) → 5; 7 is alone
+    // in cell 30 → no row
+    assert(one.map(r => (r._1, r._2)) == Seq((3L, 5L), (100L, 3L), (200L, 3L)), one)
+    val two = serve(2)
+    // the widened probe (s_filtered_serve's): 200's winner v8 (cos 1.0)
+    // sits in its SECOND probed cell 20; 7's second cell 20 gives it an
+    // answer; 3 still skips itself
+    assert(two.map(r => (r._1, r._2)) ==
+      Seq((3L, 5L), (7L, 8L), (100L, 8L), (200L, 8L)), two)
+    assert(two.find(_._1 == 200L).get._3 == 1.0)
+    // above the ceiling the keyed join + windowed top-1 emits the same
+    // rows, cos values included
+    spark.conf.set("graft.serve.broadcastMaxVectors", "0")
+    try {
+      assert(serve(1) == one)
+      assert(serve(2) == two)
+    } finally spark.conf.unset("graft.serve.broadcastMaxVectors")
+  }
+
+  test("s_neardup_gate re-arrival: under the ceiling a re-sent doc emits its distinct pairs once per arrival") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.streaming.StreamingIndex
+    import graft.streaming.StreamingIndex.DocEvent
+    // docs 0, 1, 2 share one text (every band collides); 3 is distinct
+    val boiler = "lorem ipsum dolor sit amet consectetur adipiscing elit"
+    val docs = (0L until 4L).map { i =>
+      val text = if (i < 3) boiler else "a wholly different document with its own words"
+      (i, text, "en", "src0", text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+    val dir = fixtureDir("documents" -> docs)
+    // doc 0 arrives, then arrives AGAIN in a later micro-batch
+    def drive(): Seq[(Long, Long)] = {
+      implicit val sqlCtx = spark.sqlContext
+      val input = MemoryStream[DocEvent]
+      val corpus = graft.operators.Dedup.md5BandIndex(spark, dir,
+        graft.operators.IndexStore.BandK)
+      val name = s"rearrival_${System.nanoTime()}"
+      val q = StreamingIndex.neardupGatePlan(spark, dir, input.toDF(), corpus,
+        4L, dir, "band_gate").writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try {
+        input.addData(DocEvent(0L, boiler)); q.processAllAvailable()
+        input.addData(DocEvent(0L, boiler)); q.processAllAvailable()
+      } finally q.stop()
+      spark.table(name).as[(Long, Long)].collect().toSeq.sorted
+    }
+    // per-arrival emission: each arrival's DISTINCT pairs (four
+    // colliding bands, one row per pair), once per arrival
+    assert(drive() == Seq((0L, 1L), (0L, 1L), (0L, 2L), (0L, 2L)))
+    // above the ceiling the watermarked (doc_id, dup_id) dedup
+    // SUPPRESSES the re-arrival — the regimes diverge on re-sends, a
+    // known gap of the keyed regime
+    assert(aboveCeiling(drive()) == Seq((0L, 1L), (0L, 2L)))
+  }
+
+  test("pinned builds nest: a pinnedCount inside a pinnedFeed build does not throw Recursive update") {
+    import graft.streaming.StreamingIndex
+    // feed and count pins share one cache; 64 inner keys make a shared
+    // bin with the outer key near-certain — the case in which a build
+    // running inside ConcurrentHashMap.compute threw
+    val d = fixtureDir("documents" -> Seq((0L, "a b c")).toDF("doc_id", "text"))
+    val outer = StreamingIndex.pinnedFeed(spark, d, "nest_outer") {
+      (0 until 64).map(i =>
+        StreamingIndex.pinnedCount(spark, d, s"nest_inner_$i")(i.toLong)).toVector
+    }
+    assert(outer == (0 until 64).map(_.toLong).toVector)
+    // both levels stay pinned: no rebuild on the next access
+    assert(StreamingIndex.pinnedFeed[Vector[Long]](spark, d, "nest_outer")(fail("outer rebuilt")) eq outer)
+    assert(StreamingIndex.pinnedCount(spark, d, "nest_inner_7")(fail("inner rebuilt")) == 7L)
+  }
+
   test("s_index_swap: continuity across the hot-swap — no query lost, v1 blind to arrivals") {
     val d = sf("sf0.001")
     val rows = SparkEntry.queries("s_index_swap")(spark, d).collect()
@@ -752,8 +897,14 @@ class IndexLifecycleSpec extends SparkSpec {
     // v1 serves the FROZEN pre-arrival index: an arrival (vec_id % 5
     // = 3) cannot be retrieved before the index absorbs it
     assert(rows.filter(_._1 == 1).forall(_._3 % 5 != 3))
-    // both phases keep the watermark-bounded serve shape (the swap
-    // must not regress the C5/C8 state bound)
+    // both phases keep the serve shape: under the ceiling (spec scale)
+    // the map-side plan, which holds no state at all
+    assert(graft.streaming.StreamingIndex.stateOpNames.get("s_index_swap").isEmpty)
+    // above it both phases keep the watermark-bounded keyed shape (the
+    // swap must not regress the C5/C8 state bound), row-identical
+    val keyed = aboveCeiling(SparkEntry.queries("s_index_swap")(spark, d).collect())
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(keyed == rows)
     assert(graft.streaming.StreamingIndex.stateOpNames.get("s_index_swap")
       == Set("stateStoreSave"))
   }
@@ -797,7 +948,14 @@ class IndexLifecycleSpec extends SparkSpec {
     // v1 serves the FROZEN pre-arrival index (blind to arrivals);
     // v2 is the retrained index where arrivals are retrievable
     assert(rows.filter(_._1 == 1).forall(_._3 % 5 != 3))
-    // the serve shape survives the checkpoint-carried plan swap
+    // the serve shape survives the checkpoint-carried plan swap: both
+    // phases take the stateless map-side plan under the ceiling
+    assert(graft.streaming.StreamingIndex.stateOpNames.get("s_swap_inflight").isEmpty)
+    // above the ceiling the restart carries the windowed top-1's STATE
+    // in the checkpoint (same agg, same key) — same rows
+    val keyed = aboveCeiling(SparkEntry.queries("s_swap_inflight")(spark, d).collect())
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(keyed == rows)
     assert(graft.streaming.StreamingIndex.stateOpNames.get("s_swap_inflight")
       == Set("stateStoreSave"))
   }
@@ -1177,8 +1335,13 @@ class IndexLifecycleSpec extends SparkSpec {
     }
     // the band twin serves the same generation-2 state: e3 collides
     // with e2 only (z's bands entered through the day-2 admission)
+    graft.streaming.StreamingIndex.stateRowsTotal.remove("s_neardup_gate_upd2")
     val got2 = SparkEntry.queries("s_neardup_gate_upd2")(spark, dir)
       .as[(Long, Long)].collect().toSeq
+    // under the ceiling the gate is stateless (one map-side lookup per
+    // arrival)
+    assert(graft.streaming.StreamingIndex.stateRowsTotal.get("s_neardup_gate_upd2") == 0L)
+    assert(graft.streaming.StreamingIndex.stateOpNames.get("s_neardup_gate_upd2").isEmpty)
     // identical texts give identical bands; rejected docs are not in
     // the index, so exactly the two chained pairs flag
     assert(got2.toSet == Set((f1, b1), (e3, e2)), got2)
@@ -1269,9 +1432,12 @@ class IndexLifecycleSpec extends SparkSpec {
     // the sketch-tier twin serves the same base ∪ admitted universe:
     // identical texts collide on every band, so the pair set matches
     // the exact tier's on this fixture
+    graft.streaming.StreamingIndex.stateRowsTotal.remove("s_neardup_gate_upd")
     val bandUpd = SparkEntry.queries("s_neardup_gate_upd")(spark, dir)
       .as[(Long, Long)].collect().toSeq
     assert(bandUpd.toSet == Set((f1, bIds(0)), (f3, f2)), bandUpd)
+    assert(graft.streaming.StreamingIndex.stateRowsTotal.get("s_neardup_gate_upd") == 0L)
+    assert(graft.streaming.StreamingIndex.stateOpNames.get("s_neardup_gate_upd").isEmpty)
   }
 
   test("dedup_index_update: concurrent callers build once — no double delta, identical summaries") {
