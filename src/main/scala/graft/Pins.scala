@@ -2,19 +2,23 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The ONE freeing policy behind every session-keyed pinned-relation
-  * cache (StreamingIndex.pinnedCorpus, Corpus.pinnedVocab/gramIndex,
-  * Similarity.bqIndex) and the job-scoped stage pins (Corpus.corpusBuild).
+/** The ONE session cache: every pinned input, index, collected feed and
+  * sizing scalar lives in [[pinned]]'s registry, keyed by (session,
+  * corpus dir, key) and displaced when the dir's [[Tables.dirStamp]] or
+  * the caller's input fingerprint changes. The caching boundary is the
+  * round-16 rule: a pin holds inputs, indexes and sizing scalars keyed
+  * by corpus stamp — never a declared query's result. The job-scoped
+  * stage pins (Corpus.corpusBuild) bypass the registry and release
+  * through [[free]].
   *
   * A pinned relation is a `localCheckpoint` — truncated lineage — so
   * unpersisting it under a consumer does not trigger recompute, it
   * triggers missing-block failures. The displacement invariant ("a pin
-  * must not be freed while a query over it is in flight") was previously
-  * documented at each cache and satisfied entirely by caller convention;
-  * this object ENFORCES it for both consumer kinds, scoping the release
-  * to the consumers ACTIVE AT PARK TIME — the only ones whose compiled
-  * plans can reference the old blocks (anything started later builds
-  * from the cache, which already holds the replacement):
+  * must not be freed while a query over it is in flight") is ENFORCED
+  * here for both consumer kinds, scoping the release to the consumers
+  * ACTIVE AT PARK TIME — the only ones whose compiled plans can
+  * reference the old blocks (anything started later builds from the
+  * registry, which already holds the replacement):
   *
   *  - STREAMING: a displaced pin parks with the id set of the streaming
   *    queries active at park time and is released once every one of
@@ -46,7 +50,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    still miss the racing job; closing it fully needs a bus-flush
   *    primitive Spark does not expose publicly.
   *
-  * The list is drained on every cache access and on explicit
+  * The list is drained on every registry access and on explicit
   * [[free]]/[[drain]] calls, so a long session cycling corpora cannot
   * stack corpus-sized block-manager entries. Stopped sessions never park
   * (their blocks died with the context), and drain drops their entries,
@@ -141,6 +145,69 @@ private[graft] object Pins {
       }
     }
   }
+
+  /** One registry entry: the value, the dir stamp and fingerprint it
+    * was built under (`fp == null` until the first build). The slot's
+    * monitor is the entry's build lock. */
+  private final class Slot {
+    var stamp: Long = _
+    var fp: String = _
+    var value: Any = _
+  }
+
+  private val registry =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Slot]
+
+  /** The session cache: at most one live value per (session, dir, key),
+    * rebuilt when `dir`'s stamp or `fingerprint` (the identity of any
+    * input relation the value is built from, when the stamp alone does
+    * not name it) no longer matches; the displaced value is released
+    * by [[release]] once its replacement exists. Every access sweeps
+    * entries of stopped sessions and drains the parked list. The build
+    * runs under the key's own slot monitor and OUTSIDE the map:
+    * `ConcurrentHashMap.compute` forbids mutating the map from inside
+    * its closure, and builds nest (a gen-g screen pin ensures gen g-1's,
+    * a feed build sizes itself through a count pin) — a build inside
+    * `compute` threw "Recursive update" whenever two keys shared a bin.
+    * Nested builds lock distinct keys, so they cannot deadlock unless a
+    * build re-enters its own key — a cycle no caller has. Concurrent
+    * callers of one cold key build once and share the value. */
+  def pinned[V](s: SparkSession, dir: String, key: String,
+      fingerprint: String = "")(build: => V): V = {
+    registry.keySet.removeIf(_._1.sparkContext.isStopped)
+    drain()
+    val stamp = Tables.dirStamp(dir)
+    val slot = registry.computeIfAbsent((s, dir, key), _ => new Slot)
+    slot.synchronized {
+      if (slot.fp == null || slot.stamp != stamp || slot.fp != fingerprint) {
+        val built = build
+        if (slot.fp != null) release(s, slot.value)
+        slot.value = built
+        slot.stamp = stamp
+        slot.fp = fingerprint
+      }
+      slot.value.asInstanceOf[V]
+    }
+  }
+
+  /** The one release rule, by the displaced value's type: a relation
+    * parks (its checkpoint blocks wait for their park-time holders); a
+    * broadcast unpersists non-blocking (executors share the driver JVM,
+    * so an in-flight batch holding the value object is unaffected); a
+    * pair releases each element; collected values and scalars are left
+    * to the GC. */
+  private def release(s: SparkSession, v: Any): Unit = v match {
+    case ds: org.apache.spark.sql.Dataset[_] => park(s, ds.toDF())
+    case b: org.apache.spark.broadcast.Broadcast[_] => b.unpersist(false)
+    case (a, b) => release(s, a); release(s, b)
+    case _ => ()
+  }
+
+  /** Test and tool hook: drop every entry whose key starts with
+    * `keyPrefix`, so the next access builds cold. Dropped values are
+    * not released — a caller may still hold them. */
+  private[graft] def clear(keyPrefix: String): Unit =
+    registry.keySet.removeIf(_._3.startsWith(keyPrefix))
 
   /** Test hook: number of parked (not yet released) pins. */
   private[graft] def parkedCount: Int = toFree.size()

@@ -53,8 +53,7 @@ object Tables {
     * (path, size, mtime) of the dir, its direct children (the per-table
     * parquet dirs/files), and THEIR direct children (the part files) —
     * 0 when unlistable (non-local path). The cheap input fingerprint
-    * every keyed pinned-relation cache (StreamingIndex.pinnedCorpus,
-    * Corpus.pinnedVocab/gramIndex, Similarity.bqIndex) uses to
+    * the session cache ([[Pins.pinned]]) and the durable stores use to
     * invalidate on a mid-session rewrite of the data at `d`. Mtime alone
     * was not enough (round-11 advice): filesystem-second granularity let
     * a rewrite landing in the same tick serve stale pins. Part-file

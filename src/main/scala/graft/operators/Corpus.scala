@@ -1163,7 +1163,7 @@ object Corpus {
     * md5 set, the distinct (doc_id, shingle) postings, and the per-doc
     * shingle counts over base split ∪ admitted generations < g —
     * session-pinned per (corpus, world, generation) through
-    * [[pinnedVocab]] (displaced on dirStamp change like every pin).
+    * [[pinnedVocab]].
     * Rationale (r16 verdict item 4 / guide §1.2): every increment-
     * family query (q_corpus_increment/2, q_increment_run/2, the
     * admittedDelta pin builds) re-derived the corpus-sized screen —
@@ -1384,10 +1384,11 @@ object Corpus {
     // corpusApply reads the admitted set along three lineage paths
     // (vocab fold, tokenize join, product join); measured 4.3 s →
     // the pin collapses them to one admission pass per (session,
-    // corpus, generation, world), displaced on dirStamp change like
-    // every other pin. A gen-g pin transitively holds gens < g via the
-    // verdict chain, each under its own pin. The pin key carries the
-    // world tag so two worlds' admitted sets never alias.
+    // corpus, generation, world). A gen-g pin transitively holds gens
+    // < g via the verdict chain, each under its own pin; its build
+    // ensures only gens < g, so the nested builds lock keys in strictly
+    // generation-descending order and cannot deadlock. The pin key
+    // carries the world tag so two worlds' admitted sets never alias.
     pinnedVocab(s, d, s"admittedDelta$gen@${splitTagOf(gens)}") {
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("text"))
@@ -2163,61 +2164,14 @@ object Corpus {
     * word-keyed join back onto the token stream (never a per-token
     * re-fold: at 100 TB the corpus has ~10⁹ distinct words but ~10¹³
     * token occurrences — the fold must run on the former). */
-  /** Keyed cache of the tokenizer family's pinned vocabulary
-    * relations — the StreamingIndex.pinnedCorpus discipline applied
-    * to [[charVocab]] and [[unigramLm]]'s piece universe. Before this
-    * cache, every invocation localCheckpoint'ed a FRESH distinct-
-    * word-sized relation with no eviction, so repeated bench reps of
-    * the tokenizer queries stacked block-manager entries until
-    * ContextCleaner's weak refs happened to be GC'd (round-10
-    * advice). One live pin per (session, dir, variant); a dirStamp
-    * mismatch (data rewritten mid-session) displaces rather than
-    * serving stale blocks; the displaced pin parks in [[graft.Pins]]
-    * and its checkpoint blocks are freed once its park-time holders —
-    * the then-active streaming queries plus any in-flight batch job —
-    * are done (checkpoint lineage is truncated, so freeing under a
-    * live consumer fails on missing blocks instead of recomputing). */
-  private val vocabCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), (Long, DataFrame)]
-
-  /** Test hook: drop pinned vocab relations (cold-path measurement). */
-  private[graft] def clearVocabCache(): Unit = vocabCache.clear()
-
-  /** Per-key build locks for [[pinnedVocab]]: pin builds NEST (a
-    * gen-g screen pin's build ensures gen g-1's pins, an
-    * admittedDelta pin's build re-enters this seam via the verdict
-    * chain), and ConcurrentHashMap.compute forbids any map mutation
-    * from inside a compute closure — nested ensures threw
-    * "Recursive update" whenever two live keys landed in one bin
-    * (r17; the pre-r17 nesting depth just never collided). Builds now
-    * run OUTSIDE the map under a per-key monitor; acquisition order is
-    * strictly generation-descending (gen g ensures only gens < g), so
-    * the nesting is acyclic. */
-  private val vocabLocks = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), Object]
-
+  /** The tokenizer and increment families' pinned relations: every
+    * invocation used to localCheckpoint a FRESH distinct-word-sized
+    * relation with no eviction, so repeated bench reps of the tokenizer
+    * queries stacked block-manager entries until ContextCleaner's weak
+    * refs happened to be GC'd (round-10 advice). */
   private def pinnedVocab(s: SparkSession, d: String, variant: String)(
-      build: => DataFrame): DataFrame = {
-    vocabCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    vocabLocks.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    graft.Pins.drain()
-    val fp = Tables.dirStamp(d)
-    val key = (s, d, variant)
-    val lock = vocabLocks.computeIfAbsent(key, _ => new Object)
-    lock.synchronized {
-      val cur = vocabCache.get(key)
-      if (cur != null && cur._1 == fp) cur._2
-      else {
-        // displacement parks the old pin; Pins releases it once the
-        // session has no streaming query left holding it (the
-        // displacement invariant, enforced rather than documented)
-        if (cur != null) graft.Pins.park(s, cur._2)
-        val built = build.localCheckpoint()
-        vocabCache.put(key, (fp, built))
-        built
-      }
-    }
-  }
+      build: => DataFrame): DataFrame =
+    graft.Pins.pinned(s, d, s"vocab:$variant")(build.localCheckpoint())
 
   /** The distinct-word frequency + character-split vocabulary shared
     * by [[bpeChain]], [[wordpieceMerges]], and (via a column drop)
@@ -2474,37 +2428,19 @@ object Corpus {
 
   /** Session-cached corpus gram-posting index for the streaming gate:
     * DISTINCT (h, gtext, doc_id) — the admission tier's static side,
-    * built once per (session, corpus) and localCheckpoint'ed (the
-    * [[graft.operators.Dedup]] band-index discipline). The posting
+    * built once per (session, corpus) and localCheckpoint'ed. The posting
     * carries the gram TEXT next to its 8-byte hash so the gate's one
     * equi-join verifies on exact text — a hash collision cannot fake
     * a duplicate, the batch tier's contract — while h stays the
     * leading key (at 100 TB the stored index is laid out/bucketed by
     * the fixed-width hash; the text column rides for verification). */
-  private val gramIndexCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Long, DataFrame)]
-
-  /** Test hook: drop cached gram indexes (cold-path measurement). */
-  private[graft] def clearGramIndexCache(): Unit = gramIndexCache.clear()
-
-  private[graft] def gramIndex(s: SparkSession, d: String): DataFrame = {
-    // the pinnedVocab discipline: dirStamp fingerprint (a mid-session
-    // rewrite of the data at `d` displaces rather than serving stale
-    // postings), displaced pin parked until no streaming query holds
-    // it (graft.Pins), stopped-session sweep
-    gramIndexCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    graft.Pins.drain()
-    val fp = Tables.dirStamp(d)
-    gramIndexCache.compute((s, d), (_, cur) =>
-      if (cur != null && cur._1 == fp) cur
-      else {
-        if (cur != null) graft.Pins.park(s, cur._2)
-        (fp, gramRows(Tables.documents(s, d)
-          .select(col("doc_id"), split(col("text"), " ").as("tk")))
-          .select(col("h"), col("gtext"), col("doc_id")).distinct()
-          .localCheckpoint())
-      })._2
-  }
+  private[graft] def gramIndex(s: SparkSession, d: String): DataFrame =
+    graft.Pins.pinned(s, d, "gram-index") {
+      gramRows(Tables.documents(s, d)
+        .select(col("doc_id"), split(col("text"), " ").as("tk")))
+        .select(col("h"), col("gtext"), col("doc_id")).distinct()
+        .localCheckpoint()
+    }
 
   /** Returns (dropped, cov, pins): the per-invocation localCheckpoints
     * (cand, dropped) ride along so an EAGER caller (the corpus-build
@@ -2752,7 +2688,7 @@ object Corpus {
     // planner re-executed the base scan once per branch (read from the
     // r15 explain; exchange reuse does not fire across the differently
     // pruned subtrees). The session pin collapses it to ONE base scan
-    // per (corpus, generation), displaced on dirStamp like every pin.
+    // per (corpus, generation).
     val dropped = pinnedVocab(s, d, s"substrDeltaDrops$gen@${splitTagOf(gens)}") {
       dropBase.unionByName(dropDelta).distinct()
     }
@@ -2984,8 +2920,7 @@ object Corpus {
       .select(col("w"), col("freq"),
         col("sp.j").as("j"), col("sp.i").as("i"), col("sp.p").as("p"))
     // the piece UNIVERSE: round 2's smoothing denominator iterates it
-    // again — pinned once (piece-vocabulary-sized), cached + evicted
-    // through the same keyed discipline as charVocab
+    // again — pinned once (piece-vocabulary-sized)
     val cnt0 = pinnedVocab(s, d, "umCnt0") {
       spans.groupBy(col("p")).agg(sum(col("freq")).as("cnt"))
         .filter(length(col("p")) === 1 || col("cnt") >= UmMinCnt)

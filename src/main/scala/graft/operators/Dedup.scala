@@ -230,22 +230,6 @@ object Dedup {
     array((0 until k / 4).map(b =>
       concat_ws(":", (b * 4 until (b + 1) * 4).map(m): _*)): _*)
 
-  /** Session cache for [[md5BandIndex]], keyed like
-    * Similarity.indexCache: an admission gate probes the SAME corpus
-    * sketch for its whole lifetime (build-once/probe-many — rebuilding
-    * the index per gate query re-hashes the corpus each time), and
-    * localCheckpoint ties the cached relation to its session. Carries
-    * the [[graft.Tables.dirStamp]] fingerprint like every other pinned
-    * index (round-12 review: this was the ONE session pin a mid-session
-    * corpus rewrite did NOT displace — the composed ingest gate would
-    * have mixed fresh exact/substring flags with stale band flags);
-    * displacement parks through [[graft.Pins]]. */
-  private val bandCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (Long, DataFrame)]
-
-  /** Test hook: drop cached band indexes (cold-build measurement). */
-  private[graft] def clearBandCache(): Unit = bandCache.clear()
-
   /** Band-index builds this JVM — the observable for the
     * one-build-per-corpus plan guard (the md5 sketch analog of
     * Similarity.trainRuns). */
@@ -256,19 +240,14 @@ object Dedup {
     * (s_neardup_gate) probes, built ONCE per (session, corpus) and
     * localCheckpoint'ed so each admission micro-batch (and each gate
     * query) joins an already-executed sketch instead of re-hashing the
-    * corpus. Same k and banding as [[minhashLshMd5]]. */
-  private[graft] def md5BandIndex(s: SparkSession, d: String, k: Int): DataFrame = {
-    bandCache.keySet.removeIf(key => key._1.sparkContext.isStopped)
-    graft.Pins.drain()
-    val fp = graft.Tables.dirStamp(d)
-    bandCache.compute((s, d, k), (_, cur) =>
-      if (cur != null && cur._1 == fp) cur
-      else {
-        if (cur != null) graft.Pins.park(s, cur._2)
-        bandBuilds.incrementAndGet()
-        (fp, md5BandRows(s, d, k).localCheckpoint())
-      })._2
-  }
+    * corpus. An admission gate probes the SAME corpus sketch for its
+    * whole lifetime, so rebuilding it per gate query would re-hash the
+    * corpus each time. Same k and banding as [[minhashLshMd5]]. */
+  private[graft] def md5BandIndex(s: SparkSession, d: String, k: Int): DataFrame =
+    graft.Pins.pinned(s, d, s"band:$k") {
+      bandBuilds.incrementAndGet()
+      md5BandRows(s, d, k).localCheckpoint()
+    }
 
   /** Per-document band keys computed MAP-SIDE from a (doc_id, tk
     * token-array) relation — the per-event form of the batch sketch

@@ -234,25 +234,15 @@ object IndexStore {
       math.max(MinBuckets.toLong, math.sqrt(nDocs.toDouble).toLong)).toInt
 
   /** The corpus doc count the bucket law keys on — a metadata-only
-    * count (parquet-footer arithmetic), MEMOIZED per (dir, dirStamp)
-    * so repeat accessor calls don't re-run the count job (the r14
-    * bench showed ~0.6 s of repeated counts on q_dedup_index_persist;
-    * the stamp key displaces the entry on any corpus rewrite, the
-    * same freshness rule as every pin). The FULL corpus count is used
-    * for the `_upd` tables too, although their base build holds only
-    * the non-'f' split (15/16 of it): the law is an
-    * order-of-magnitude dial, and a filtered count would be a full
-    * column scan at 100 TB where this stays footer arithmetic. */
-  private val docCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]
-  private def corpusDocCount(s: SparkSession, d: String): Long = {
-    val stamp = Tables.dirStamp(d)
-    // displaced stamps of the same dir are dead — drop them so a long
-    // session cycling corpus rewrites doesn't accumulate entries
-    docCountCache.keySet.removeIf(k => k._1 == d && k._2 != stamp)
-    docCountCache.computeIfAbsent((d, stamp),
-      _ => Tables.documents(s, d).count())
-  }
+    * count (parquet-footer arithmetic), pinned per corpus stamp so
+    * repeat accessor calls don't re-run the count job (the r14 bench
+    * showed ~0.6 s of repeated counts on q_dedup_index_persist). The
+    * FULL corpus count is used for the `_upd` tables too, although
+    * their base build holds only the non-'f' split (15/16 of it): the
+    * law is an order-of-magnitude dial, and a filtered count would be
+    * a full column scan at 100 TB where this stays footer arithmetic. */
+  private def corpusDocCount(s: SparkSession, d: String): Long =
+    graft.Pins.pinned(s, d, "doc-count")(Tables.documents(s, d).count())
 
   private def tableName(base: String, d: String): String = s"${base}_${tagOf(d)}"
 

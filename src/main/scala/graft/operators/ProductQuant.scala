@@ -47,6 +47,21 @@ object ProductQuant {
     * [[Similarity.trainRuns]]); [[pqIndex]] is what keeps it at 1. */
   private[graft] val pqTrainRuns = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** The frozen pre-arrival codebook build for [[pqRefresh]], factored
+    * out so Bench can pre-build (and price) it next to [[pqIndex]] — the
+    * same cold-build-out-of-the-measured-rep move as
+    * [[Similarity.preArrivalIndex]]. Pinned SEPARATELY from [[pqIndex]]
+    * because the refresh only ever reads the codebooks: pinning the
+    * (codebooks, codes) pair would eagerly code and checkpoint the whole
+    * pre-arrival corpus for a relation nothing consumes. */
+  private[graft] def preArrivalCodebooks(s: SparkSession, d: String): DataFrame =
+    graft.Pins.pinned(s, d, "pq:pre-arrival") {
+      val old = Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding"))
+        .filter(col("vec_id") % 5 =!= 3)
+      trainCodebooks(old, pqStride(old.count()))
+    }
+
   /** Materialized PQ index, keyed by (session, data dir) exactly like
     * [[Similarity.ivfIndex]]: the trained per-subspace codebooks and
     * the full corpus coding, each localCheckpoint'ed so every consumer
@@ -56,35 +71,9 @@ object ProductQuant {
     * that REPLACES the float corpus in the serving tier — both built
     * once per corpus. Training is integer-deterministic, so cached and
     * fresh results are bit-identical and the per-query DuckDB oracles
-    * (which replay the chain each time) stay green. */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]
-
-  /** Frozen pre-arrival codebooks for [[pqRefresh]] — cached SEPARATELY
-    * from [[pqCache]] because the refresh only ever reads the
-    * codebooks: caching through the (codebooks, codes) pair would
-    * eagerly code and checkpoint the whole pre-arrival corpus for a
-    * relation nothing consumes. */
-  private val pqRefreshCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
-  /** Test hook: drop materialized PQ indexes so a spec can measure a
-    * cold build. */
-  private[graft] def clearPqCache(): Unit = { pqCache.clear(); pqRefreshCache.clear() }
-
-  /** The frozen pre-arrival codebook build, factored out so Bench can
-    * pre-build (and price) it next to [[pqIndex]] — the same
-    * cold-build-out-of-the-measured-rep move as
-    * [[Similarity.preArrivalIndex]]. */
-  private[graft] def preArrivalCodebooks(s: SparkSession, d: String): DataFrame =
-    pqRefreshCache.computeIfAbsent((s, d), { _ =>
-      val old = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"))
-        .filter(col("vec_id") % 5 =!= 3)
-      trainCodebooks(old, pqStride(old.count()))
-    })
-
-  /** The shared PQ build: (codebooks, codes). One count() (parquet
+    * (which replay the chain each time) stay green.
+    *
+    * The shared PQ build: (codebooks, codes). One count() (parquet
     * metadata), one training chain, one coding pass — the coding runs
     * through the native [[graft.functions.PqEncode]] coder against the
     * COLLECTED trained codebook (≤ [[Subs]]·[[PqK]] rows by contract —
@@ -95,7 +84,7 @@ object ProductQuant {
     * lesson applied to the BATCH chain — the streaming ingest coder
     * already ran this expression, spec-pinned value-identical). */
   private[graft] def pqIndex(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    pqCache.computeIfAbsent((s, d), { _ =>
+    graft.Pins.pinned(s, d, "pq") {
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val cb = trainCodebooks(e, pqStride(e.count()))
       val codes = xsOf(e)
@@ -104,7 +93,7 @@ object ProductQuant {
             .as(Seq("sub", "code")))
         .localCheckpoint()
       (cb, codes)
-    })
+    }
 
   /** (vec_id, xs) — the 1e6-scaled long vector, the native coder's
     * input currency (the streaming ingest's `xs` column). */

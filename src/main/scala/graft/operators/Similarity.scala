@@ -125,22 +125,16 @@ object Similarity {
     * so cached and fresh results are bit-identical and the per-query
     * DuckDB oracles (which replay the full chain each time) stay green.
     * Keyed by session because a checkpoint dies with its session; keyed
-    * by dir because each corpus has its own index. */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]
-
-  /** Test hook: drop materialized indexes so a spec can measure a cold
-    * build (the cache is append-only otherwise). */
-  private[graft] def clearIndexCache(): Unit = indexCache.clear()
-
-  /** The shared index build: (centroids, cells). One count() (parquet
+    * by dir because each corpus has its own index.
+    *
+    * The shared index build: (centroids, cells). One count() (parquet
     * metadata), one training chain, one assignment pass — then every
     * probe, eval, health check, and semantic-dedup pass reuses the two
     * checkpointed relations. */
   private[graft] def ivfIndex(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    indexCache.computeIfAbsent((s, d), { _ =>
+    graft.Pins.pinned(s, d, "ivf") {
       buildIndex(Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
-    })
+    }
 
   /** Cell ceiling under which training/assignment argmax runs MAP-SIDE
     * over the collected centroid literal (conf
@@ -281,8 +275,8 @@ object Similarity {
     * counts and imbalance before vs after absorbing the arrivals.
     * Rising imbalance is THE retrain trigger ([[ivfCellStats]] is the
     * steady-state view; this is the decision view). Cost: one extra
-    * training chain per session (cached like [[ivfIndex]], keyed by a
-    * synthetic dir suffix) + an O(n_new·nlist) assignment pass under
+    * training chain per session (pinned like [[ivfIndex]], under its
+    * own key) + an O(n_new·nlist) assignment pass under
     * the O(nlist) broadcast. Fully oracled: the frozen chain replays
     * via the shared training CTE over the filtered corpus, the
     * arrival assignment via the same argmax window. */
@@ -292,11 +286,11 @@ object Similarity {
     * rep, where the cold/warm spread false-trips the contamination
     * flag at larger scale factors. */
   private[graft] def preArrivalIndex(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    indexCache.computeIfAbsent((s, d + "::pre-arrival"), { _ =>
+    graft.Pins.pinned(s, d, "ivf:pre-arrival") {
       buildIndex(Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"))
         .filter(col("vec_id") % 5 =!= 3))
-    })
+    }
 
   def indexRefresh(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
@@ -1712,31 +1706,13 @@ object Similarity {
     * tier holds, the literal-centroids discipline) and the pinned
     * coded corpus (vec_id, embedding, w0, w1). Build-once/serve-many:
     * [[bqPersist]] and the streaming Hamming serve read THIS build. */
-  private val bqCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Long, Seq[Long], DataFrame)]
-
-  /** Test hook: drop materialized BQ indexes. */
-  private[graft] def clearBqCache(): Unit = bqCache.clear()
-
-  private[graft] def bqIndex(s: SparkSession, d: String): (Seq[Long], DataFrame) = {
-    // the pinnedVocab discipline: dirStamp fingerprint (a mid-session
-    // rewrite of the corpus displaces rather than serving stale codes),
-    // displaced pin parked until no streaming query holds it
-    // (graft.Pins), stopped-session sweep
-    bqCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    graft.Pins.drain()
-    val fp = graft.Tables.dirStamp(d)
-    val e = bqCache.compute((s, d), (_, cur) =>
-      if (cur != null && cur._1 == fp) cur
-      else {
-        if (cur != null) graft.Pins.park(s, cur._3)
-        val e0 = Tables.embeddings(s, d)
-        val ts = bqThresholds(e0).collect().head
-          .getSeq[Long](0).toSeq
-        (fp, ts, bqCoded(e0).localCheckpoint())
-      })
-    (e._2, e._3)
-  }
+  private[graft] def bqIndex(s: SparkSession, d: String): (Seq[Long], DataFrame) =
+    graft.Pins.pinned(s, d, "bq") {
+      val e0 = Tables.embeddings(s, d)
+      val ts = bqThresholds(e0).collect().head
+        .getSeq[Long](0).toSeq
+      (ts, bqCoded(e0).localCheckpoint())
+    }
 
   /** q_bq_persist — the BQ lifecycle's durable tier (the
     * [[indexPersist]]/[[ProductQuant]] q_pq_persist discipline applied

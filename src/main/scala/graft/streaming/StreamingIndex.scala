@@ -305,86 +305,20 @@ object StreamingIndex {
     joined.select(col("s.doc_id").as("doc_id"), col("c.doc_id").as("dup_id"))
   }
 
-  /** Pinned static serving relations, keyed by (session, dir, variant)
-    * PLUS a fingerprint of the build inputs: a serving tier pins its
-    * corpus relation next to the index ONCE — every restart, rep, and
-    * consumer then reads the same executed relation (the
-    * [[Similarity.ivfIndex]] philosophy applied to the stream-static
-    * join side). Re-pinning per rig invocation was pure scaffolding
-    * cost (`rig_setup_sec` in bench_full.json made it visible). The
-    * fingerprint carries (a) the semantic hash of any input RELATION
-    * the variant is built from — so a caller passing a different cell
-    * assignment under an existing variant string gets a fresh pin, not
-    * the cached one — and (b) an mtime stamp of the corpus dir, so a
-    * rewrite of the data at `dir` mid-session invalidates rather than
-    * silently serving stale blocks. Eviction: besides the test-only
-    * [[clearPinnedCache]], every access sweeps entries from stopped
-    * sessions and displaces same-(session, dir, variant) entries whose
-    * fingerprint no longer matches — the cache holds at most one live
-    * pin per serving variant. */
-  private val pinnedCache = new java.util.concurrent.ConcurrentHashMap[PinKey, Slot[DataFrame]]
-
-  private type PinKey = (SparkSession, String, String)
-
-  /** One cache entry: the pinned value and the fingerprint it was built
-    * under. The slot's monitor is the entry's build lock. */
-  private final class Slot[V <: AnyRef] {
-    var fp: String = _
-    var value: V = _
-  }
-
-  /** The one pin lifecycle behind every cache of this object: at most
-    * one live value per (session, dir, variant), rebuilt when `fp` no
-    * longer matches (the displaced value goes to `displace` once its
-    * replacement exists), entries of stopped sessions swept on every
-    * access. The build runs under the key's own slot monitor and
-    * OUTSIDE the map: `ConcurrentHashMap.compute` forbids mutating the
-    * same map from inside its closure, and pinned builds nest (a feed
-    * build sizing itself through [[pinnedCount]]) — a nested compute
-    * threw "Recursive update" whenever the two keys shared a bin (the
-    * Corpus.pinnedVocab fix, applied to every cache here). Nested builds lock distinct keys, so
-    * they cannot deadlock unless a build re-enters its own key — a
-    * cycle no caller has. */
-  private def pinnedIn[V <: AnyRef](
-      cache: java.util.concurrent.ConcurrentHashMap[PinKey, Slot[V]],
-      key: PinKey, fp: String)(displace: V => Unit)(build: => V): V = {
-    cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val slot = cache.computeIfAbsent(key, _ => new Slot[V])
-    slot.synchronized {
-      if (slot.value == null || slot.fp != fp) {
-        val built = build
-        if (slot.value != null) displace(slot.value)
-        slot.value = built
-        slot.fp = fp
-      }
-      slot.value
-    }
-  }
-
-  /** Test hook: drop pinned serving relations (cold-path measurement). */
-  private[graft] def clearPinnedCache(): Unit = {
-    pinnedCache.clear()
-    feedCache.clear()
-  }
-
   /** Once-per-(session, corpus stamp) COLLECTED rig feeds and
     * feed-sizing scalars. Every rig's MemoryStream drive replays the
     * same deterministic event sequence, yet each invocation re-ran the
     * count + filtered-collect jobs that CONSTRUCT it — pure rig
     * scaffolding (visible as rig_setup_sec), ~0.3–0.5 s per rep per
     * rig at sf0.1, never part of the serving path a deployment pays
-    * per trigger (its feed is a live topic that exists once). Same
-    * displacement discipline as [[pinnedCorpus]]: a dirStamp change at
-    * `d` rebuilds the entry. Values are immutable collected
-    * arrays/seqs shared read-only across reps and consumers; the
-    * handful of panels and literal codebooks total a few MB — the doc
-    * feeds are the same rows the rigs already collected per rep. */
-  private val feedCache = new java.util.concurrent.ConcurrentHashMap[PinKey, Slot[AnyRef]]
-
-  private[graft] def pinnedFeed[A <: AnyRef](
+    * per trigger (its feed is a live topic that exists once). Values
+    * are immutable collected arrays/seqs shared read-only across reps
+    * and consumers; the handful of panels and literal codebooks total a
+    * few MB — the doc feeds are the same rows the rigs already
+    * collected per rep. */
+  private[graft] def pinnedFeed[A](
       s: SparkSession, d: String, variant: String)(build: => A): A =
-    pinnedIn(feedCache, (s, d, variant), s"@${dirStamp(d)}")(_ => ())(build)
-      .asInstanceOf[A]
+    graft.Pins.pinned(s, d, s"feed:$variant")(build)
 
   /** The shared recall panel as collected [[VecEvent]]s, vec_id
     * ascending — the query feed of every vector serve rig. */
@@ -413,7 +347,7 @@ object StreamingIndex {
     * value that only changes when the pin itself is displaced. */
   private[graft] def pinnedCount(s: SparkSession, d: String,
       variant: String)(build: => Long): Long =
-    pinnedFeed(s, d, variant) { java.lang.Long.valueOf(build) }.longValue
+    graft.Pins.pinned(s, d, s"count:$variant")(build)
 
   /** Collected literal centroid rows for a serve plan, keyed by the
     * index variant — the per-rep collect job was scaffolding; the
@@ -426,24 +360,19 @@ object StreamingIndex {
         .as[(Long, Seq[Double])].collect().toSeq
     }
 
-  /** See [[graft.Tables.dirStamp]] — shared with Corpus.pinnedVocab. */
-  private def dirStamp(d: String): Long = graft.Tables.dirStamp(d)
-
+  /** Pinned static serving relations, keyed by (session, dir, variant)
+    * plus `inputFingerprint`: a serving tier pins its corpus relation
+    * next to the index ONCE — every restart, rep, and consumer then
+    * reads the same executed relation (the [[Similarity.ivfIndex]]
+    * philosophy applied to the stream-static join side). Re-pinning per
+    * rig invocation was pure scaffolding cost (`rig_setup_sec` in
+    * bench_full.json made it visible). The fingerprint carries the
+    * semantic hash of any input RELATION the variant is built from, so
+    * a caller passing a different cell assignment under an existing
+    * variant string gets a fresh pin, not the cached one. */
   private def pinnedCorpus(s: SparkSession, d: String, variant: String,
-      inputFingerprint: String = "")(build: => DataFrame): DataFrame = {
-    graft.Pins.drain()
-    // Displacement must not free the old pin's checkpoint blocks under
-    // a consumer — a localCheckpoint RDD has truncated lineage, so a
-    // holder (e.g. an in-flight micro-batch under the same variant)
-    // would fail with missing-block errors rather than recompute.
-    // graft.Pins ENFORCES this: the displaced pin parks in a to-free
-    // list released once its park-time holders (the streaming queries
-    // active at the displacement, plus any in-flight batch job) are
-    // done, so a long session cycling serving variants still cannot
-    // stack corpus-sized block-manager entries.
-    pinnedIn(pinnedCache, (s, d, variant), s"$inputFingerprint@${dirStamp(d)}")(
-      graft.Pins.park(s, _))(build.localCheckpoint())
-  }
+      inputFingerprint: String = "")(build: => DataFrame): DataFrame =
+    graft.Pins.pinned(s, d, s"serving:$variant", inputFingerprint)(build.localCheckpoint())
 
   /** Flat posting map for the under-ceiling hashed-key gate regime:
     * (hi, lo) = the 16-byte md5 gram key as two longs, sorted
@@ -485,36 +414,28 @@ object StreamingIndex {
     * literal-centroids discipline at posting scale — so the map is
     * collected and broadcast once per (session, corpus stamp) and each
     * batch probes it map-side; the probe side is the per-batch arrival
-    * grams (bounded), the probe a binary search. Same lifecycle as
-    * [[pinnedCorpus]]: the dirStamp fingerprint displaces a stale map;
-    * the displaced broadcast is unpersisted non-blocking (executors
-    * share the local JVM, so an in-flight batch holding the value
-    * object is unaffected). Only built UNDER the posting ceiling —
-    * above it the durable/sharded join shapes own the plan and no
-    * driver-sized collect may happen. */
-  private val postingMapCache = new java.util.concurrent.ConcurrentHashMap[
-    PinKey, Slot[Broadcast[PostingMap]]]
-
+    * grams (bounded), the probe a binary search. Only built UNDER the
+    * posting ceiling — above it the durable/sharded join shapes own the
+    * plan and no driver-sized collect may happen. */
   private[streaming] def pinnedPostingMap(
       s: SparkSession, d: String, variant: String,
       corpus: DataFrame): Broadcast[PostingMap] =
-    pinnedIn(postingMapCache, (s, d, variant), s"@${dirStamp(d)}")(
-      _.unpersist(false)) {
-        val rows = corpus.select(col("ghash"), col("doc_id")).collect()
-        val n = rows.length
-        val hi = new Array[Long](n); val lo = new Array[Long](n)
-        val dc = new Array[Long](n)
-        var i = 0
-        while (i < n) {
-          val bb = java.nio.ByteBuffer.wrap(rows(i).getAs[Array[Byte]](0))
-          hi(i) = bb.getLong(); lo(i) = bb.getLong()
-          dc(i) = rows(i).getLong(1)
-          i += 1
-        }
-        val perm = Array.range(0, n).sortBy(j => (hi(j), lo(j), dc(j)))
-        val h2 = perm.map(hi); val l2 = perm.map(lo); val d2 = perm.map(dc)
-        s.sparkContext.broadcast(new PostingMap(h2, l2, d2))
+    graft.Pins.pinned(s, d, s"postings:$variant") {
+      val rows = corpus.select(col("ghash"), col("doc_id")).collect()
+      val n = rows.length
+      val hi = new Array[Long](n); val lo = new Array[Long](n)
+      val dc = new Array[Long](n)
+      var i = 0
+      while (i < n) {
+        val bb = java.nio.ByteBuffer.wrap(rows(i).getAs[Array[Byte]](0))
+        hi(i) = bb.getLong(); lo(i) = bb.getLong()
+        dc(i) = rows(i).getLong(1)
+        i += 1
       }
+      val perm = Array.range(0, n).sortBy(j => (hi(j), lo(j), dc(j)))
+      val h2 = perm.map(hi); val l2 = perm.map(lo); val d2 = perm.map(dc)
+      s.sparkContext.broadcast(new PostingMap(h2, l2, d2))
+    }
 
   /** String-keyed twin of [[PostingMap]] for the band and md5 tiers:
     * key → posting doc ids (sorted, multiplicity preserved). Lookups
@@ -591,15 +512,10 @@ object StreamingIndex {
     * carried; `inputFingerprint` names that relation's pin when the
     * dirStamp alone does not (a serve map over a rebuilt cell
     * assignment must displace with its corpus pin). */
-  private val keyedMapCache = new java.util.concurrent.ConcurrentHashMap[
-    PinKey, Slot[Broadcast[_]]]
-
   private[streaming] def pinnedKeyedMap[M <: AnyRef : scala.reflect.ClassTag](
       s: SparkSession, d: String, variant: String, inputFingerprint: String = "")(
       build: => M): Broadcast[M] =
-    pinnedIn(keyedMapCache, (s, d, variant), s"$inputFingerprint@${dirStamp(d)}")(
-      _.unpersist(false))(s.sparkContext.broadcast(build))
-      .asInstanceOf[Broadcast[M]]
+    graft.Pins.pinned(s, d, s"keyed:$variant", inputFingerprint)(s.sparkContext.broadcast(build))
 
   /** The composite band lookup key — ONE definition for build and
     * probe sides (band is an int, so the ':' split is unambiguous). */

@@ -36,7 +36,7 @@ object ProfileNeardup {
     }
     val k = 16
     time("band_index_build (cold)") {
-      Dedup.clearBandCache()
+      graft.Pins.clear("band:")
       Dedup.md5BandIndex(spark, d, k).count()
     }
     val docs = graft.Tables.documents(spark, d)

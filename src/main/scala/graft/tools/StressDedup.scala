@@ -176,7 +176,7 @@ object StressDedup {
     // warm so the family rows measure probe scaling.
     def timeBuild(dir: String): Option[Double] =
       try Some((1 to 2).map { _ =>
-        graft.operators.Similarity.clearIndexCache()
+        graft.Pins.clear("ivf")
         val t0 = System.nanoTime()
         graft.operators.Similarity.ivfIndex(spark, dir)
         (System.nanoTime() - t0) / 1e9
@@ -188,7 +188,7 @@ object StressDedup {
     val buildRow = {
       val tb = timeBuild(base)
       val ts = timeBuild(out)
-      // the last clearIndexCache dropped base's entry — re-warm it
+      // the last Pins.clear("ivf") dropped base's entry — re-warm it
       try graft.operators.Similarity.ivfIndex(spark, base)
       catch { case scala.util.control.NonFatal(_) => () }
       val ratio = for (b <- tb; s <- ts) yield s / (b * k)

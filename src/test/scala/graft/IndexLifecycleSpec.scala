@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -151,7 +152,7 @@ class IndexLifecycleSpec extends SparkSpec {
 
   test("q_index_refresh: frozen index, coherent counts, one extra chain across repeat calls") {
     val d = sf("sf0.001")
-    Similarity.clearIndexCache()
+    Pins.clear("ivf")
     val before = Similarity.trainRuns.get()
     val r1 = SparkEntry.queries("q_index_refresh")(spark, d).collect()(0)
     val r2 = SparkEntry.queries("q_index_refresh")(spark, d).collect()(0)
@@ -220,7 +221,7 @@ class IndexLifecycleSpec extends SparkSpec {
   }
 
   test("PQ family: ONE training chain per (session, corpus) — the shared codebooks") {
-    graft.operators.ProductQuant.clearPqCache()
+    Pins.clear("pq")
     val before = graft.operators.ProductQuant.pqTrainRuns.get()
     for (q <- Seq("q_pq_recall", "q_ivfpq_recall", "q_ivfpq_rerank",
         "q_pq_persist", "s_pq_ingest"))
@@ -414,6 +415,71 @@ class IndexLifecycleSpec extends SparkSpec {
     val b2 = operators.Dedup.md5BandIndex(spark, dir, 16)
     assert(b2.select("doc_id").distinct().collect().map(_.getLong(0)).toSeq == Seq(2L),
       "stale band pin served after corpus rewrite")
+  }
+
+  test("IVF/PQ pins: an in-place corpus rewrite retrains all four indexes and frees the old pins") {
+    // a corpus rewritten in place must not keep serving its old IVF/PQ
+    // indexes for the session's life, and the old checkpoints must be
+    // freed
+    def pinRdds(dfs: DataFrame*) = dfs.flatMap(_.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    })
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    def indexes(d: String) = (Similarity.ivfIndex(spark, d),
+      Similarity.preArrivalIndex(spark, d), operators.ProductQuant.pqIndex(spark, d),
+      operators.ProductQuant.preArrivalCodebooks(spark, d))
+    val base = Tables.embeddings(spark, sf("sf0.001"))
+    val d = fixtureDir("embeddings" -> base)
+    val ((cen1, cells1), (pcen1, pcells1), (cb1, codes1), pcb1) = indexes(d)
+    val old = pinRdds(cen1, cells1, pcen1, pcells1, cb1, codes1, pcb1)
+    assert(old.size == 7)
+    // different vectors AND a different vector set: 400 of the 500,
+    // each embedding reversed
+    val rewritten = base.filter(col("vec_id") < 400)
+      .withColumn("embedding", reverse(col("embedding")))
+    val ivfRuns = Similarity.trainRuns.get()
+    val pqRuns = operators.ProductQuant.pqTrainRuns.get()
+    rewritten.write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    val ivf2 = Similarity.ivfIndex(spark, d)
+    assert(Pins.parkedCount >= 2) // the displaced (centroids, cells) pair parks
+    val ((cen2, cells2), (pcen2, pcells2), (cb2, codes2), pcb2) =
+      (ivf2, Similarity.preArrivalIndex(spark, d), operators.ProductQuant.pqIndex(spark, d),
+        operators.ProductQuant.preArrivalCodebooks(spark, d))
+    // one retrain per index, not zero
+    assert(Similarity.trainRuns.get() == ivfRuns + 2)
+    assert(operators.ProductQuant.pqTrainRuns.get() == pqRuns + 2)
+    // the rebuilt indexes are the ones a fresh corpus dir trains
+    val ((cenF, cellsF), (pcenF, pcellsF), (cbF, codesF), pcbF) =
+      indexes(fixtureDir("embeddings" -> rewritten))
+    assert(cells2.count() == 400L && codes2.select("vec_id").distinct().count() == 400L)
+    for ((got, want) <- Seq(cen2 -> cenF, cells2 -> cellsF, pcen2 -> pcenF,
+        pcells2 -> pcellsF, cb2 -> cbF, codes2 -> codesF, pcb2 -> pcbF))
+      assert(rows(got) == rows(want))
+    // the displaced pins free once no job holds them
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (Pins.parkedCount > 0 && System.nanoTime() < deadline) {
+      Pins.drain(); Thread.sleep(10)
+    }
+    assert(Pins.parkedCount == 0)
+    assert(old.forall(_.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE))
+  }
+
+  test("Pins: concurrent callers of a cold md5BandIndex key build once and share the pin") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val d = fixtureDir("documents" -> Seq(
+      (1L, "alpha beta gamma delta epsilon"), (2L, "zeta eta theta iota kappa"))
+      .toDF("doc_id", "text"))
+    val before = operators.Dedup.bandBuilds.get()
+    val gate = new java.util.concurrent.CyclicBarrier(2)
+    val runs = (1 to 2).map(_ => Future {
+      gate.await()
+      operators.Dedup.md5BandIndex(spark, d, 16)
+    })
+    val Seq(a, b) = runs.map(Await.result(_, 120.seconds))
+    assert(a eq b)
+    assert(operators.Dedup.bandBuilds.get() == before + 1)
   }
 
   test("s_corpus_ingest: one flag row per (arrival, tier) — quality, exact, substring, neardup; clean docs silent") {
@@ -876,6 +942,22 @@ class IndexLifecycleSpec extends SparkSpec {
     // both levels stay pinned: no rebuild on the next access
     assert(StreamingIndex.pinnedFeed[Vector[Long]](spark, d, "nest_outer")(fail("outer rebuilt")) eq outer)
     assert(StreamingIndex.pinnedCount(spark, d, "nest_inner_7")(fail("inner rebuilt")) == 7L)
+    // the registry itself: 64 distinct keys built inside one build
+    val direct = Pins.pinned(spark, d, "nest:direct") {
+      (0 until 64).map(i => Pins.pinned(spark, d, s"nest:direct:$i")(i)).sum
+    }
+    assert(direct == (0 until 64).sum)
+    assert(Pins.pinned[Int](spark, d, "nest:direct")(fail("direct rebuilt")) == direct)
+    assert(Pins.pinned[Int](spark, d, "nest:direct:9")(fail("inner rebuilt")) == 9)
+    // index pins built inside a feed build
+    val bandBuilds = operators.Dedup.bandBuilds.get()
+    val idx = StreamingIndex.pinnedFeed(spark, d, "nest_indexes") {
+      (operators.Dedup.md5BandIndex(spark, d, 16), operators.Corpus.gramIndex(spark, d))
+    }
+    assert(StreamingIndex.pinnedFeed[AnyRef](spark, d, "nest_indexes")(fail("feed rebuilt")) eq idx)
+    assert(operators.Dedup.md5BandIndex(spark, d, 16) eq idx._1)
+    assert(operators.Corpus.gramIndex(spark, d) eq idx._2)
+    assert(operators.Dedup.bandBuilds.get() == bandBuilds + 1)
   }
 
   test("s_index_swap: continuity across the hot-swap — no query lost, v1 blind to arrivals") {

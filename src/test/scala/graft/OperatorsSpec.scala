@@ -1235,7 +1235,7 @@ class OperatorsSpec extends SparkSpec {
       (5L, vec(0.299, y299, 0, 0), 0),  // cos vs q = 0.299 → excluded
       (17L, vec(1, 0, 0, 0), 0),        // the panel query
     ).toDF("vec_id", "embedding", "label"))
-    graft.operators.Similarity.clearIndexCache()
+    graft.Pins.clear("ivf")
     val r = Similarity.rangeSearch(spark, dir).collect()
     assert(r.length == 1)
     assert(r.head.getDouble(0) == 0.3)      // tau

@@ -622,7 +622,7 @@ class PlanHygieneSpec extends SparkSpec {
     // build-once/probe-many is the index lifecycle a 100 TB deployment
     // has; eight consumers retraining eight times would misstate the
     // cost model 8×. trainRuns counts trainedCentroids executions.
-    operators.Similarity.clearIndexCache()
+    Pins.clear("ivf")
     val before = operators.Similarity.trainRuns.get()
     for (q <- Seq("q_similarity_ivf", "q_ann_recall", "q_ivf_cell_stats",
         "q_ivfsq_recall", "q_semdedup", "q_index_persist", "s_vector_ingest",
@@ -658,7 +658,7 @@ class PlanHygieneSpec extends SparkSpec {
     // the admission gate probes a pre-built corpus sketch; rebuilding it
     // per gate query would re-hash the corpus every time (the md5 analog
     // of the IVF retrain-per-query shape round 5 eliminated)
-    operators.Dedup.clearBandCache()
+    Pins.clear("band:")
     val before = operators.Dedup.bandBuilds.get()
     for (_ <- 1 to 2)
       SparkEntry.queries("s_neardup_gate")(spark, sf("sf0.001"))
