@@ -55,6 +55,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * stack corpus-sized block-manager entries. Stopped sessions never park
   * (their blocks died with the context), and drain drops their entries,
   * so the queue cannot retain dead session graphs past the next access.
+  *
+  * SIZE RULE — one, for every broadcast decision: every pin is made by
+  * [[checkpoint]], which measures its row count and row bytes on the
+  * checkpoint job and hands them to the planner as the pin's
+  * statistics, so a join against a pin broadcasts exactly when
+  * `spark.sql.autoBroadcastJoinThreshold` admits its bytes — the
+  * planner's own rule, left to the planner. A site that answers
+  * map-side from a collected copy of a pin (the serve rigs and the
+  * gates) asks [[broadcastable]], the same predicate, so a deployment
+  * widens or narrows every gate at once through that one threshold
+  * (`-1` forces every keyed regime). A streaming probe side is never
+  * hinted: its per-batch size is unbounded.
   */
 private[graft] object Pins {
 
@@ -89,6 +101,21 @@ private[graft] object Pins {
       val parkedAt: Long)
 
   private val toFree = new java.util.concurrent.ConcurrentLinkedQueue[Parked]
+
+  /** Pin `df`: `localCheckpoint`'s one eager job, with the measured row
+    * count and summed row bytes as the pin's statistics (the built-in
+    * keeps the origin plan's estimate — hundreds of MiB for a 200 KB
+    * self-join pin, a tenth of the truth for a posting pin). */
+  def checkpoint(df: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftColumnBridge.measuredLocalCheckpoint(df)
+
+  /** The size rule: `df`'s estimated bytes are within the session's
+    * `spark.sql.autoBroadcastJoinThreshold` — the predicate the planner
+    * applies to a join side. */
+  def broadcastable(s: SparkSession, df: DataFrame): Boolean = {
+    val t = org.apache.spark.sql.GraftColumnBridge.broadcastThreshold(s)
+    t >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= t
+  }
 
   private def checkpointRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collect {

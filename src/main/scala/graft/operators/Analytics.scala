@@ -220,7 +220,7 @@ object Analytics {
     val keys = Tables.orders(s, d)
       .filter(col("o_orderstatus") === "O")
       .select(col("o_orderkey"))
-      .localCheckpoint()
+      .transform(graft.Pins.checkpoint)
     val limit = s.conf.getOption("graft.islands.distributedMinRows")
       .map(_.toLong).getOrElse(IslandsDistributedMinRows)
     val ranked =

@@ -847,7 +847,7 @@ object Corpus {
         .withColumn("mn", min(col("doc_id")).over(wExact))
         .filter(col("doc_id") === col("mn")).drop("mn")
         .observe(obsE, count(lit(1)).as("n_exact"))
-        .localCheckpoint()
+        .transform(graft.Pins.checkpoint)
     }
     // the checkpoint above executed the observed scan — read the
     // funnel scalars now (blocks only on the already-finished job)
@@ -871,7 +871,7 @@ object Corpus {
         else survivors0
       e0.join(survivors, Seq("doc_id"))
         .observe(obsU, count(lit(1)).as("n_unique"))
-        .localCheckpoint()
+        .transform(graft.Pins.checkpoint)
     }
     // 4. substring clean (text rewrite). The tier pins (cand, dropped)
     // are freed as soon as this stage's own checkpoint has executed —
@@ -879,13 +879,13 @@ object Corpus {
     // on ContextCleaner GC across bench reps).
     val c0 = stage(s, "4 substring clean") {
       val (cleaned, subPins) = substringCleanOver(u0)
-      val pinned = cleaned.localCheckpoint()
+      val pinned = graft.Pins.checkpoint(cleaned)
       subPins.foreach(graft.Pins.free)
       pinned
     }
     // 5. tokenizer learned on the cleaned survivors, then applied
     val (mergeRows, vocabN, cv) = stage(s, "5a bpe chain") {
-      val cv = charVocabOver(c0).localCheckpoint()
+      val cv = graft.Pins.checkpoint(charVocabOver(c0))
       val (m, v) = bpeChainOverVocab(cv)
       (m, v, cv)
     }
@@ -911,7 +911,7 @@ object Corpus {
       val pinned = hashed
         .repartitionByRange(parts, col("shard"), col("h"), col("doc_id"))
         .withColumn("pid", spark_partition_id())
-        .localCheckpoint()
+        .transform(graft.Pins.checkpoint)
       val st = pinned.groupBy(col("pid"), col("shard"))
         .agg(count(lit(1)).as("c"), sum(col("n_tokens")).as("t"))
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3)))
@@ -998,10 +998,11 @@ object Corpus {
 
   /** Doc-count ceiling under which [[buildProductOver]] broadcasts its
     * doc-keyed METADATA relations (survivor IDs, layout rows) instead
-    * of keyed-joining them against the text payload — the
-    * [[graft.streaming.StreamingIndex.NeardupBroadcastMaxDocs]]
-    * arithmetic applied to the build: ≤ ~50 B/doc ⇒ ≤ ~50 MB at the
-    * 1M-doc ceiling. Conf `graft.corpus.buildBroadcastMaxDocs`. */
+    * of keyed-joining them against the text payload: ≤ ~50 B/doc ⇒
+    * ≤ ~50 MB at the 1M-doc ceiling. A row ceiling, not the pin size
+    * rule ([[graft.Pins]]): the gated relations are derived through
+    * joins, whose size estimates multiply. Conf
+    * `graft.corpus.buildBroadcastMaxDocs`. */
   private def buildBroadcastMaxDocs(s: SparkSession): Long =
     s.conf.getOption("graft.corpus.buildBroadcastMaxDocs")
       .map(_.toLong).getOrElse(1L << 20)
@@ -2171,7 +2172,7 @@ object Corpus {
     * refs happened to be GC'd (round-10 advice). */
   private def pinnedVocab(s: SparkSession, d: String, variant: String)(
       build: => DataFrame): DataFrame =
-    graft.Pins.pinned(s, d, s"vocab:$variant")(build.localCheckpoint())
+    graft.Pins.pinned(s, d, s"vocab:$variant")(graft.Pins.checkpoint(build))
 
   /** The distinct-word frequency + character-split vocabulary shared
     * by [[bpeChain]], [[wordpieceMerges]], and (via a column drop)
@@ -2439,7 +2440,7 @@ object Corpus {
       gramRows(Tables.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("tk")))
         .select(col("h"), col("gtext"), col("doc_id")).distinct()
-        .localCheckpoint()
+        .transform(graft.Pins.checkpoint)
     }
 
   /** Returns (dropped, cov, pins): the per-invocation localCheckpoints
@@ -2464,7 +2465,7 @@ object Corpus {
     // held 30 scans of the documents parquet / 78 exchanges. The
     // localCheckpoint runs fresh on every invocation (nothing carries
     // across runs) and collapses the plan to one derivation.
-    val cand = grams.join(hot, Seq("h")).localCheckpoint()
+    val cand = graft.Pins.checkpoint(grams.join(hot, Seq("h")))
     // tier 2: exact-text verify within the candidate tier only
     val dup = cand.groupBy(col("gtext"))
       .agg(countDistinct(col("doc_id")).as("gdf"),
@@ -2476,7 +2477,7 @@ object Corpus {
     val dropped = cand.join(dup, Seq("gtext"))
       .filter(col("doc_id") =!= col("first_doc"))
       .select(col("doc_id"), col("pos"))
-      .localCheckpoint()
+      .transform(graft.Pins.checkpoint)
     val cov = dropped.select(col("doc_id"),
       explode(sequence(col("pos"), col("pos") + SubstrL - 1)).as("tpos"))
       .distinct()
@@ -2493,19 +2494,11 @@ object Corpus {
     * rewrite's dominant cost (guide §1.2: don't recompute what the
     * input already holds; measured r17: the full-corpus posexplode +
     * doc-keyed shuffle + collect_list was most of the 2.1 s "substring
-    * clean" stage). Broadcast under the standard size gate (conf
-    * `graft.substring.affectedBroadcastMaxDocs`, default 1M — the
-    * count job reads the already-pinned collision-tier blocks); above
-    * it the doc-keyed join is the honest at-scale shape. */
-  private def affectedDocs(dropped: DataFrame): DataFrame = {
-    val s = dropped.sparkSession
-    val a = dropped.select(col("doc_id")).distinct()
-    val gate = s.conf.getOption("graft.substring.affectedBroadcastMaxDocs")
-      .map(_.toLong).getOrElse(1L << 20)
-    // dropped rows ≥ affected docs, so the row count is a conservative
-    // gate — and it is a one-job read of pinned collision-tier blocks
-    if (dropped.count() <= gate) broadcast(a) else a
-  }
+    * clean" stage). `dropped` is a measured pin, so the planner
+    * broadcasts the doc set while it fits the threshold; above it the
+    * doc-keyed join is the honest at-scale shape. */
+  private def affectedDocs(dropped: DataFrame): DataFrame =
+    dropped.select(col("doc_id")).distinct()
 
   /** The corpus-build form of the exact-substring tier: REWRITE each
     * document to its kept (original-order) tokens instead of reporting

@@ -246,7 +246,7 @@ object Dedup {
   private[graft] def md5BandIndex(s: SparkSession, d: String, k: Int): DataFrame =
     graft.Pins.pinned(s, d, s"band:$k") {
       bandBuilds.incrementAndGet()
-      md5BandRows(s, d, k).localCheckpoint()
+      graft.Pins.checkpoint(md5BandRows(s, d, k))
     }
 
   /** Per-document band keys computed MAP-SIDE from a (doc_id, tk
@@ -455,11 +455,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Per-round label-broadcast ceiling for [[connectedComponents]] (conf
-    * `graft.dedup.ccBroadcastMaxDocs`): a label row is 16 bytes, so the
-    * default 1M-doc gate bounds the broadcast at ~16 MB. */
-  private val CcBroadcastMaxDocs = 1L << 20
-
   /** Connected components over an undirected pair list (doc_a, doc_b):
     * (doc_id, cluster_rep = min doc in its component) for every doc
     * appearing in a pair. Min-label propagation; see [[dedupCluster]]. */
@@ -478,21 +473,18 @@ object Dedup {
           struct(col("doc_a"), col("doc_b")),
           struct(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))).as("e"))
         .select(col("e.doc_a").as("doc_a"), col("e.doc_b").as("doc_b"))
-        .localCheckpoint()
+        .transform(graft.Pins.checkpoint)
     }
     var labels = labeled("init") {
       edges.select(col("doc_a").as("doc")).distinct()
         .withColumn("lbl", col("doc"))
-        .localCheckpoint()
+        .transform(graft.Pins.checkpoint)
     }
     // the label relation is one row per doc in the pair graph — orders
-    // smaller than the edge list. Under the gate it broadcasts into the
-    // per-round join so the checkpointed edges never shuffle again;
-    // above it the keyed join is the honest at-scale shape. The count is
-    // a bounded scalar off the just-checkpointed labels.
-    val useBc = labeled("init") { labels.count() } <=
-      pairs.sparkSession.conf.getOption("graft.dedup.ccBroadcastMaxDocs")
-        .map(_.toLong).getOrElse(CcBroadcastMaxDocs)
+    // smaller than the edge list. Each round's labels are a measured
+    // pin, so the planner broadcasts them into the per-round join while
+    // they fit the threshold (the checkpointed edges never shuffle
+    // again) and keys the join above it.
     var changed = 1L
     var round = 0
     while (changed > 0) {
@@ -502,8 +494,7 @@ object Dedup {
       // of a separate join against the previous labels
       val self = labels.select(col("doc"), col("lbl"), lit(true).as("own"))
       val viaNbr = edges
-        .join(if (useBc) broadcast(labels) else labels,
-          edges("doc_b") === labels("doc"))
+        .join(labels, edges("doc_b") === labels("doc"))
         .select(col("doc_a").as("doc"), col("lbl"), lit(false).as("own"))
       // the convergence count rides the SAME checkpoint job as an
       // observed metric (CollectMetrics) — a separate count() job per
@@ -517,7 +508,7 @@ object Dedup {
           .agg(min(col("lbl")).as("lbl"),
             min(when(col("own"), col("lbl"))).as("old"))
           .observe(obs, count(when(col("lbl") < col("old"), 1)).as("chg"))
-          .localCheckpoint()
+          .transform(graft.Pins.checkpoint)
       }
       changed = obs.get("chg").asInstanceOf[Long]
       labels = agg.select(col("doc"), col("lbl"))

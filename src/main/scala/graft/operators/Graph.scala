@@ -24,14 +24,6 @@ object Graph {
   private val Scale = 1000000000000L
   private val Iterations = 3
 
-  /** Broadcast the n-row rank relation into the edge join when the node
-    * count is under this ceiling (conf `graft.graph.broadcastMaxNodes`) —
-    * a rank row is 16 bytes, so the default 1M-node gate bounds the
-    * broadcast at ~16 MB while keeping the loop-invariant edge list
-    * entirely un-shuffled across iterations. Above the gate the keyed
-    * join is the honest at-scale shape. */
-  private val BroadcastMaxNodes = 1L << 20
-
   /** q_pagerank — damped PageRank (d = 0.85, 3 fixed iterations) on the
     * undirected customer↔supplier graph: node ids are disambiguated
     * (customer = 2k, supplier = 2k+1), each edge carries rank/degree in
@@ -63,31 +55,30 @@ object Graph {
         struct(col("p").as("src"), col("c").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .withColumn("d", count(lit(1)).over(w))
-      .localCheckpoint()
-    val nodes = edges.select(col("src").as("node")).distinct().localCheckpoint()
+      .transform(graft.Pins.checkpoint)
+    val nodes = graft.Pins.checkpoint(edges.select(col("src").as("node")).distinct())
     // n is a bounded scalar (one Long off an already-checkpointed n-row
     // relation): resolving it once replaces a broadcast crossJoin in the
     // init AND in every iteration
     val n = nodes.count()
-    val useBc = n <= s.conf.getOption("graft.graph.broadcastMaxNodes")
-      .map(_.toLong).getOrElse(BroadcastMaxNodes)
     // init: every node starts with SCALE/n (floor) micro-units
     var ranks = nodes.select(col("node"), lit(Scale / n).as("rank"))
     val teleport = (Scale * 15 / 100) / n
     for (it <- 1 to Iterations) {
       // checkpoint per round: iteration i's plan must not replay 1..i-1
       // (the last round's plan is consumed exactly once by the edge sort
-      // below, so it skips the checkpoint write). Under the node gate the
-      // n-row ranks broadcast into the E-row checkpointed edges — the
-      // edge list never shuffles again after its one materialization.
+      // below, so it skips the checkpoint write). The ranks are a
+      // measured pin: within the broadcast threshold the planner ships
+      // the n-row ranks into the E-row checkpointed edges — the edge
+      // list never shuffles again after its one materialization.
       ranks = edges
-        .join(if (useBc) broadcast(ranks) else ranks, col("src") === col("node"))
+        .join(ranks, col("src") === col("node"))
         .select(col("dst"), expr("rank div d").as("contrib"))
         .groupBy(col("dst"))
         .agg(sum(col("contrib")).as("in_mass"))
         .select(col("dst").as("node"),
           (lit(teleport) + expr("(85 * in_mass) div 100")).as("rank"))
-      if (it < Iterations) ranks = ranks.localCheckpoint()
+      if (it < Iterations) ranks = graft.Pins.checkpoint(ranks)
     }
     ranks
       .select(col("node"), col("rank"),

@@ -62,7 +62,7 @@ private[graft] object PrefixStitch {
     val parts = math.max(1, s.conf.get("spark.sql.shuffle.partitions").toInt)
     val base = df.repartitionByRange(parts, keys: _*)
     val ordered = if (sortWithin) base.sortWithinPartitions(keys: _*) else base
-    val pinned = ordered.withColumn("pid", spark_partition_id()).localCheckpoint()
+    val pinned = graft.Pins.checkpoint(ordered.withColumn("pid", spark_partition_id()))
     val scalars = pinned.groupBy(col("pid"))
       .agg(scalarAggs.head, scalarAggs.tail: _*)
       .collect().map(r => (r.getInt(0), get(r))).toMap

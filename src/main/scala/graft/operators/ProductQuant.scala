@@ -91,7 +91,7 @@ object ProductQuant {
         .select(col("vec_id"),
           posexplode(graft.functions.pq_encode(col("xs"), collectCb(cb), DSub))
             .as(Seq("sub", "code")))
-        .localCheckpoint()
+        .transform(graft.Pins.checkpoint)
       (cb, codes)
     }
 
@@ -166,7 +166,7 @@ object ProductQuant {
           round(col("sx").cast("double") / col("cnt")).cast("long").as("cv"))).as("pv"))
         .select(col("sub"), col("code"),
           transform(array_sort(col("pv")), p => p.getField("cv")).as("c"))
-        .localCheckpoint()
+        .transform(graft.Pins.checkpoint)
       cbRows = collectCb(cb)
     }
     cb

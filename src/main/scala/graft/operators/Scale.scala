@@ -377,7 +377,7 @@ object Scale {
           keep
         }
       }.toDF("a_key", "a_name", "a_bal", "a_vol")
-      .localCheckpoint()
+      .transform(graft.Pins.checkpoint)
     val limit = s.conf.getOption("graft.skyline.broadcastMaxCands")
       .map(_.toLong).getOrElse(SkylineBroadcastMaxCands)
     val frontier =

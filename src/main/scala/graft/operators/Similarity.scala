@@ -173,7 +173,7 @@ object Similarity {
   private def buildIndex(e: DataFrame): (DataFrame, DataFrame) = {
     val cen = trainedCentroids(e, ivfStride(e.count()))
     val cells = gatedAssign(e, cen)
-      .select(col("vec_id"), col("cell")).localCheckpoint()
+      .select(col("vec_id"), col("cell")).transform(graft.Pins.checkpoint)
     (cen, cells)
   }
 
@@ -363,7 +363,7 @@ object Similarity {
         .select(col("cell").as("centroid_id"),
           transform(array_sort(col("pv")), p => p.getField("v")).as("cvec"))
     }
-    cen.localCheckpoint()
+    graft.Pins.checkpoint(cen)
   }
 
   /** q_similarity_ivf — IVF ANN with a TRAINED index: a SIZE-INDEPENDENT
@@ -1191,7 +1191,7 @@ object Similarity {
     // the posting-join shape on hybridLexCand directly (the checkpoint
     // hides it from the declared plan) plus the unchanged cell leg on
     // the declared plan.
-    val cand = hybridLexCand(s, d, panel).localCheckpoint()
+    val cand = graft.Pins.checkpoint(hybridLexCand(s, d, panel))
     val wl = Window.partitionBy(col("qid"))
       .orderBy(col("overlap").desc, col("doc_id").asc)
     val lex = cand
@@ -1352,7 +1352,7 @@ object Similarity {
         explode(split(col("text"), " ")).as("tok"))
       .groupBy(col("doc_id"), col("dl"), col("tok"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .transform(graft.Pins.checkpoint)
     val dfT = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     // corpus scalars OFF the tf relation (exchange-reusable) — a
     // separate docs aggregate would tokenize the corpus a second time.
@@ -1513,7 +1513,7 @@ object Similarity {
         cosine(col("embedding"), col("qvec")).as("cos"))
       .withColumn("rn", row_number().over(wq)).filter(col("rn") <= 10)
       .select(col("qid"), col("vec_id"))
-      .localCheckpoint()
+      .transform(graft.Pins.checkpoint)
     val perDim = MatryoshkaDims.map { dims =>
       val approx = pairs
         .select(col("qid"), col("vec_id"),
@@ -1711,7 +1711,7 @@ object Similarity {
       val e0 = Tables.embeddings(s, d)
       val ts = bqThresholds(e0).collect().head
         .getSeq[Long](0).toSeq
-      (ts, bqCoded(e0).localCheckpoint())
+      (ts, graft.Pins.checkpoint(bqCoded(e0)))
     }
 
   /** q_bq_persist — the BQ lifecycle's durable tier (the
@@ -1854,7 +1854,7 @@ object Similarity {
         cosine(col("embedding"), col("qvec")).as("rel"))
       .withColumn("rn", row_number().over(wq)).filter(col("rn") <= MmrShortlist)
       .select(col("qid"), col("vec_id"), col("embedding"), col("rel"))
-      .localCheckpoint()
+      .transform(graft.Pins.checkpoint)
     val sims = shortlist.select(col("qid"), col("vec_id").as("a"),
         col("embedding").as("ea"))
       .join(shortlist.select(col("qid"), col("vec_id").as("b"),
@@ -1862,7 +1862,7 @@ object Similarity {
       .filter(col("a") =!= col("b"))
       .select(col("qid"), col("a"), col("b"),
         cosine(col("ea"), col("eb")).as("sim"))
-      .localCheckpoint()
+      .transform(graft.Pins.checkpoint)
     val sl = shortlist.select(col("qid"), col("vec_id"), col("rel"))
     val ws = Window.partitionBy(col("qid"))
       .orderBy(col("score").desc, col("vec_id").asc)
@@ -1872,7 +1872,7 @@ object Similarity {
         (lit(MmrLambda) * col("rel")).as("score"))
       .withColumn("rn", row_number().over(ws)).filter(col("rn") === 1)
       .select(col("qid"), lit(1).as("pos"), col("vec_id"), col("score"))
-      .localCheckpoint()
+      .transform(graft.Pins.checkpoint)
     for (t <- 2 to MmrK) {
       val cand = sl.join(selected.select(col("qid"), col("vec_id")),
         Seq("qid", "vec_id"), "left_anti")
@@ -1888,7 +1888,7 @@ object Similarity {
       selected = selected.unionByName(
         scored.withColumn("rn", row_number().over(ws)).filter(col("rn") === 1)
           .select(col("qid"), lit(t).as("pos"), col("vec_id"), col("score")))
-        .localCheckpoint()
+        .transform(graft.Pins.checkpoint)
     }
     selected
       .select(col("qid"), col("pos"), col("vec_id"),

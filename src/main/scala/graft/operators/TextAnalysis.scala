@@ -238,7 +238,7 @@ object TextAnalysis {
       .select(col("doc_a"), col("doc_b"),
         levenshtein(col("pa"), col("pb")).as("dist"))
       .filter(col("dist") <= 30)
-      .localCheckpoint()
+      .transform(graft.Pins.checkpoint)
       .orderBy("doc_a", "doc_b")
   }
 

@@ -362,7 +362,7 @@ object Tpch {
       .groupBy(col("l_orderkey"), col("l_suppkey"))
       .agg(sum(when(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"),
         1L).otherwise(0L)).as("n_late"))
-      .localCheckpoint() // referenced three times: base, semi side, anti side
+      .transform(graft.Pins.checkpoint) // referenced three times: base, semi side, anti side
     val late = sg.filter(col("n_late") > 0L)
     val sn = broadcast(Tables.supplier(s, d)
       .join(broadcast(Tables.nation(s, d).filter(col("n_name") === "NATION_1")),

@@ -125,10 +125,10 @@ object StreamingIndex {
 
   /** Run `body` (a whole rig: start, feed, stop) with NO-DATA
     * micro-batches disabled. Only rigs whose plan keeps watermarked
-    * state can run a no-data batch at all, so under the size-gate
-    * ceilings — where the serve rigs and the near-dup gates answer
+    * state can run a no-data batch at all, so within the broadcast
+    * threshold — where the serve rigs and the near-dup gates answer
     * each arrival map-side with no watermark and no state — the conf
-    * changes nothing. It matters for the ABOVE-ceiling serve plans
+    * changes nothing. It matters for the keyed serve plans
     * (update mode, windowed top-1), the substring gates and the
     * composed ingest. The staggered drive drains the source between
     * chunks, so with the default conf every data batch there is chased
@@ -162,17 +162,8 @@ object StreamingIndex {
     try body finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
   }
 
-  /** Corpus-size ceiling (in documents) under which [[sNeardupGate]]
-    * broadcasts the band sketch. Arithmetic: each doc contributes
-    * k/4 = 4 band rows of ~90 B (doc_id + band + the 4-minhash decimal
-    * band_key string) ≈ 360 B/doc, so 1M docs ≈ 360 MB of sketch —
-    * about the most a serving executor should pin. Above it the hint
-    * is withheld and the join shuffles on band_key (the sketch shards
-    * across the cluster like any keyed table). Overridable per-session
-    * via conf `graft.neardup.broadcastMaxDocs` (the spec knob). */
-  private[graft] val NeardupBroadcastMaxDocs = 1L << 20
-
-  /** Salt fan-out for [[sNeardupGate]]'s above-ceiling regime (conf
+  /** Salt fan-out for [[sNeardupGate]]'s keyed regime, when the band
+    * pin is over the broadcast threshold (conf
     * `graft.neardup.saltBuckets`; the default 1 DISABLES it — a
     * measured decision, NEARDUP_SKEW.json). Near-dup corpora are
     * Zipf-hot in band keys BY CONSTRUCTION (boilerplate documents
@@ -185,8 +176,8 @@ object StreamingIndex {
     * remedy this even in batch — its input-byte heuristics are blind
     * to output explosion and coalescing makes it 3.5× WORSE, see
     * NEARDUP_SKEW.json and PLANS.md). BUT the plan the
-    * gate actually executes above the ceiling is NOT key-partitioned:
-    * withholding the corpus hint makes the planner broadcast the tiny
+    * gate actually executes when the pin is over the threshold is NOT
+    * key-partitioned: the planner broadcasts the tiny
     * PER-BATCH probe side (BuildLeft — verified on the executed
     * micro-batch), so arrivals travel, the sharded corpus stays put,
     * and pair emission parallelism follows the corpus's STORAGE
@@ -207,34 +198,27 @@ object StreamingIndex {
     * stacks hot bands into fewer tasks and made the measured run
     * 3.5× worse (38.6 s `hot_aqe_smj_bare` vs 10.9 s `hot_smj_bare`;
     * NEARDUP_SKEW.json). The salt, not AQE, is the remedy here.
-    * PlanHygieneSpec guards the executed above-ceiling plan
+    * PlanHygieneSpec guards the executed keyed-regime plan
     * (BuildLeft probe broadcast) so a planner regression cannot
     * silently reintroduce the key-partitioned shape. */
   private[graft] val NeardupSaltBuckets = 1
 
-  /** The corpus-doc ceiling of the near-dup tier: conf
-    * `graft.neardup.broadcastMaxDocs`, default [[NeardupBroadcastMaxDocs]]. */
-  private def neardupLimit(s: SparkSession): Long =
-    s.conf.getOption("graft.neardup.broadcastMaxDocs")
-      .map(_.toLong).getOrElse(NeardupBroadcastMaxDocs)
-
   /** The (arrival, existing) band-collision pairs for [[sNeardupGate]]:
-    * under [[NeardupBroadcastMaxDocs]] corpus docs (with a `bandMap`)
-    * one map-side lookup per arrival against the once-per-pin sketch
-    * map emits the arrival's DISTINCT dup ids; above it the corpus
-    * hint is withheld (probe side broadcasts instead — see
+    * when `corpus` is [[graft.Pins.broadcastable]] and a `bandMap` is
+    * supplied, one map-side lookup per arrival against the once-per-pin
+    * sketch map emits the arrival's DISTINCT dup ids; otherwise an
+    * unhinted join (the planner broadcasts the probe side — see
     * [[NeardupSaltBuckets]] for the measured skew story), optionally
-    * salted (both knobs conf-overridable — the spec and stress
-    * handles), and the join emits one row per colliding band. `probes`
-    * are per-arrival (doc_id, bands) rows ([[Dedup.md5BandArrays]] —
-    * the map branch needs them) or per-band (doc_id, band, band_key)
-    * rows, which the join branches take as they are. Every shape emits
+    * salted, emits one row per colliding band. `probes` are
+    * per-arrival (doc_id, bands) rows ([[Dedup.md5BandArrays]] — the
+    * map branch needs them) or per-band (doc_id, band, band_key) rows,
+    * which the join branches take as they are. Every shape emits
     * the same distinct pairs over the same index CONTENT — but see the
     * `dir` contract below for the durable regimes, where content
     * itself is conf-selected.
     *
     * CONTRACT on `dir` (round-13 advice): when non-empty AND
-    * `graft.index.durable` is set, the above-ceiling branch DISCARDS
+    * `graft.index.durable` is set, the join branch DISCARDS
     * the passed `corpus` relation and probes a durable table rebuilt
     * from `dir` at k = [[graft.operators.IndexStore.BandK]] — so `dir`
     * must name the corpus `corpus` was sketched from, at that same k
@@ -248,18 +232,17 @@ object StreamingIndex {
     * .durableBandUpd]] — the increment regime, where the full-corpus
     * pin is exactly what must NOT be probed). */
   private[graft] def neardupCandidatePairs(
-      s: SparkSession, probes: DataFrame, corpus: DataFrame, nDocs: Long,
+      s: SparkSession, probes: DataFrame, corpus: DataFrame,
       dir: String = "",
       bandMap: Option[() => Broadcast[KeyedDocsMap]] = None): DataFrame = {
-    val limit = neardupLimit(s)
     val cond = col("s.band") === col("c.band") &&
       col("s.band_key") === col("c.band_key") &&
       col("s.doc_id") =!= col("c.doc_id")
-    // under the ceiling with a caller-supplied band map: ONE lookup of
-    // the arrival's whole band array against the once-per-pin broadcast
-    // (see [[pinnedKeyedMap]]) answers its sorted distinct dup ids —
-    // no join, no per-trigger broadcast, no cross-band dedup state
-    if (nDocs <= limit && bandMap.isDefined) {
+    // a broadcastable pin with a caller-supplied band map: ONE lookup
+    // of the arrival's whole band array against the once-per-pin
+    // broadcast (see [[pinnedKeyedMap]]) answers its sorted distinct
+    // dup ids — no join, no per-trigger broadcast, no cross-band state
+    if (bandMap.isDefined && graft.Pins.broadcastable(s, corpus)) {
       val bc = bandMap.get.apply()
       val probe = udf((ks: Seq[String], self: Long) => bc.value.lookupDistinct(ks, self))
       val keys = transform(col("bands"), (k, b) => bandMapKey(b, k))
@@ -268,21 +251,19 @@ object StreamingIndex {
     }
     val perBand = if (!probes.columns.contains("bands")) probes
       else probes.select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "band_key")))
-    val joined = if (nDocs <= limit) {
-      perBand.as("s").join(broadcast(corpus).as("c"), cond)
-    } else {
-      val r = s.conf.getOption("graft.neardup.saltBuckets")
-        .map(_.toInt).getOrElse(NeardupSaltBuckets)
-      // the durable-store regime (`graft.index.durable`): above the
-      // ceiling, probe the BUCKETED band table instead of the session
-      // pin — the scan is already clustered on the join keys, so the
-      // static side feeds the join with zero per-batch exchange (and
-      // the layout survives restart); the salt path keeps the pin
-      // (salting breaks bucket co-location by construction).
-      // "updated" probes base ∪ admitted (the increment regime);
-      // "updated2" the twice-extended generation-2 state (base ∪ a₁ ∪
-      // a₂); "true" probes the full-corpus table.
-      val durable = s.conf.getOption("graft.index.durable")
+    val r = s.conf.getOption("graft.neardup.saltBuckets")
+      .map(_.toInt).getOrElse(NeardupSaltBuckets)
+    // the durable-store regime (`graft.index.durable`): probe the
+    // BUCKETED band table instead of the session pin — the scan is
+    // already clustered on the join keys, so the static side feeds the
+    // join with zero per-batch exchange (and the layout survives
+    // restart); the salt path keeps the pin (salting breaks bucket
+    // co-location by construction). "updated" probes base ∪ admitted
+    // (the increment regime); "updated2" the twice-extended
+    // generation-2 state (base ∪ a₁ ∪ a₂); "true" probes the
+    // full-corpus table.
+    val durable = s.conf.getOption("graft.index.durable")
+    val joined =
       if (r <= 1 && dir.nonEmpty && durable.contains("updated2"))
         perBand.as("s")
           .join(graft.operators.IndexStore.durableBandUpd2(s, dir).as("c"), cond)
@@ -301,7 +282,6 @@ object StreamingIndex {
           .as("s")
           .join(salted.as("c"), cond && col("s.salt") === col("c.salt"))
       }
-    }
     joined.select(col("s.doc_id").as("doc_id"), col("c.doc_id").as("dup_id"))
   }
 
@@ -342,13 +322,6 @@ object StreamingIndex {
         .as[DocEvent].collect().toSeq.sortBy(_.doc_id)
     }
 
-  /** Size-gate scalar cached per (session, corpus stamp, variant) —
-    * the count job over a pinned index relation re-ran per rep for a
-    * value that only changes when the pin itself is displaced. */
-  private[graft] def pinnedCount(s: SparkSession, d: String,
-      variant: String)(build: => Long): Long =
-    graft.Pins.pinned(s, d, s"count:$variant")(build)
-
   /** Collected literal centroid rows for a serve plan, keyed by the
     * index variant — the per-rep collect job was scaffolding; the
     * literal set is what gets compiled into the plan either way. */
@@ -372,9 +345,9 @@ object StreamingIndex {
     * variant string gets a fresh pin, not the cached one. */
   private def pinnedCorpus(s: SparkSession, d: String, variant: String,
       inputFingerprint: String = "")(build: => DataFrame): DataFrame =
-    graft.Pins.pinned(s, d, s"serving:$variant", inputFingerprint)(build.localCheckpoint())
+    graft.Pins.pinned(s, d, s"serving:$variant", inputFingerprint)(graft.Pins.checkpoint(build))
 
-  /** Flat posting map for the under-ceiling hashed-key gate regime:
+  /** Flat posting map for the map-side hashed-key gate regime:
     * (hi, lo) = the 16-byte md5 gram key as two longs, sorted
     * lexicographically with doc ids aligned (ties by doc id, so probe
     * output order is deterministic). ~24 B/posting — the same bytes
@@ -403,7 +376,7 @@ object StreamingIndex {
     }
   }
 
-  /** Once-per-pin broadcast of the under-ceiling hashed gram postings
+  /** Once-per-pin broadcast of a broadcastable hashed gram posting pin
     * (guide §2.4/§8: move the heavy bytes once, decide with small
     * rows). A stream-static BROADCAST join re-executes its
     * BroadcastExchange every micro-batch — collect + hash-relation
@@ -414,9 +387,9 @@ object StreamingIndex {
     * literal-centroids discipline at posting scale — so the map is
     * collected and broadcast once per (session, corpus stamp) and each
     * batch probes it map-side; the probe side is the per-batch arrival
-    * grams (bounded), the probe a binary search. Only built UNDER the
-    * posting ceiling — above it the durable/sharded join shapes own the
-    * plan and no driver-sized collect may happen. */
+    * grams (bounded), the probe a binary search. Only built for a pin
+    * within the broadcast threshold — over it the durable/sharded join
+    * shapes own the plan and no driver-sized collect may happen. */
   private[streaming] def pinnedPostingMap(
       s: SparkSession, d: String, variant: String,
       corpus: DataFrame): Broadcast[PostingMap] =
@@ -528,32 +501,6 @@ object StreamingIndex {
     pinnedKeyedMap(s, d, variant)(KeyedDocsMap.of(
       bands.select(bandMapKey(col("band"), col("band_key")), col("doc_id"))))
 
-  /** Broadcast ceiling for the serve rigs' STATIC side (conf
-    * `graft.serve.broadcastMaxVectors`): a serving row is ~300 B
-    * (vec_id + 64-float embedding + cell, or the 8-code PQ row), so the
-    * default 256k-vector gate bounds the broadcast map at ~80 MB. */
-  private val ServeBroadcastMaxVectors = 1L << 18
-
-  /** The serve rigs' size gate (guide §3: pick the strategy
-    * deliberately). Under the ceiling the pinned serving corpus is
-    * collected ONCE per pin into a broadcast [[CellMap]] and every
-    * arrival is answered map-side ([[serveTop1Plan]]): no join, no
-    * Exchange, no state store, no per-trigger BroadcastExchange. Above
-    * it the keyed join is the honest at-scale shape (the corpus is
-    * cell-partitioned durable storage at 100 TB, and a probe reads one
-    * partition): the corpus is never hinted there, and the streaming
-    * side is never force-broadcast (round 12's OOM rule). */
-  private[graft] def serveMapSide(s: SparkSession, d: String, variant: String,
-      corpus: DataFrame): Boolean = {
-    // the count key carries the PIN's identity, not just (dir,
-    // variant): a pin displaced under the same variant (e.g. a rebuilt
-    // cell assignment) must displace its gate scalar with it, or the
-    // map/keyed decision would be made on the stale count (r16 advice)
-    val n = pinnedCount(s, d, s"n_serve_${variant}_${pinId(corpus)}")(corpus.count())
-    n <= s.conf.getOption("graft.serve.broadcastMaxVectors")
-      .map(_.toLong).getOrElse(ServeBroadcastMaxVectors)
-  }
-
   /** A pinned relation's identity — the semantic hash of its analyzed
     * plan, which names the checkpointed RDD — so a value keyed on it
     * displaces together with the pin. */
@@ -635,12 +582,13 @@ object StreamingIndex {
     * over the literal, cos DESC / centroid_id ASC ties via the
     * Long.MaxValue−id trick) is pure MAP-SIDE work. The top-1 rerank
     * over the probed cell (max of (cos, MaxValue−vec_id) — cos DESC,
-    * vec_id ASC ties) is size-gated ([[serveMapSide]]). Under the
-    * ceiling the candidates come from the once-per-pin broadcast
-    * [[CellMap]], and the answer is one stateless projection per
-    * arrival: append mode, no join, no shuffle, no state — the
+    * vec_id ASC ties) is size-gated ([[graft.Pins.broadcastable]] on
+    * the serving pin). Within the threshold the candidates come from
+    * the once-per-pin broadcast [[CellMap]], and the answer is one
+    * stateless projection per arrival: append mode, no join, no
+    * shuffle, no state — the
     * reference's per-record lookups are stateless maps too
-    * (Main.java:137-141). Above it they come from one stream-static
+    * (Main.java:137-141). Over it they come from one stream-static
     * equi-join on the probed cell (at 100 TB the corpus is partitioned
     * by cell, so a probe reads one partition), and the top-1 is a
     * stateful aggregation WINDOWED on the query's arrival stamp under
@@ -661,7 +609,7 @@ object StreamingIndex {
     // identical assignment ⇒ shared pin and map, different ⇒ honest
     // displacement (not the round-9 silent stale hit).
     val corpus = servingCorpus(s, d, cells, "serve")
-    val mapSide = serveMapSide(s, d, "serve", corpus)
+    val mapSide = graft.Pins.broadcastable(s, corpus)
     runServe(s, "s_ann_serve", vecPanel(s, d), mapSide)(
       serveTop1Plan(s, _, d, "ivf", cen, "serve", corpus, mapSide)).orderBy("qid")
   }
@@ -683,10 +631,10 @@ object StreamingIndex {
     * whose probed cells hold no label-matching candidate emits nothing
     * — the empty-result-is-an-answer contract, same as the oracle
     * replay. Everything else is [[sAnnServe]]'s size-gated shape:
-    * map-side against the once-per-pin [[CellMap]] under the ceiling,
-    * the keyed join plus watermarked windowed top-1 above it. Fully
-    * oracled: probe top-2, label filter, and rerank replay in DuckDB
-    * over the shared IVF training CTE. */
+    * map-side against the once-per-pin [[CellMap]] within the
+    * threshold, the keyed join plus watermarked windowed top-1 over
+    * it. Fully oracled: probe top-2, label filter, and rerank replay
+    * in DuckDB over the shared IVF training CTE. */
   def sFilteredServe(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     val (cen, cells) = Similarity.ivfIndex(s, d)
@@ -696,7 +644,7 @@ object StreamingIndex {
         .join(cells, "vec_id")
         .select(col("vec_id"), col("embedding"), col("cell"))
     }
-    val mapSide = serveMapSide(s, d, "filtered", corpus)
+    val mapSide = graft.Pins.broadcastable(s, corpus)
     runServe(s, "s_filtered_serve", vecPanel(s, d), mapSide)(
       serveTop1Plan(s, _, d, "ivf", cen, "filtered", corpus, mapSide, nProbe = 2))
       .orderBy("qid")
@@ -736,7 +684,7 @@ object StreamingIndex {
     def servePhase(version: Int, cenTag: String, cen: => DataFrame,
         variant: String, cells: DataFrame, queries: Seq[VecEvent]): DataFrame = {
       val corpus = servingCorpus(s, d, cells, variant)
-      val mapSide = serveMapSide(s, d, variant, corpus)
+      val mapSide = graft.Pins.broadcastable(s, corpus)
       runServe(s, "s_index_swap", queries, mapSide)(
         serveTop1Plan(s, _, d, cenTag, cen, variant, corpus, mapSide))
         .select(lit(version).as("version"), col("qid"), col("vec_id"), col("cos_sim"))
@@ -779,9 +727,10 @@ object StreamingIndex {
     * — then the top-1 of their candidates minus the query itself,
     * ranked by `rerank`. The centroids are collected and compiled INTO
     * the plan (the serving-RAM move of [[sAnnServe]]), so a new index
-    * is literally a new plan. With `mapSide` ([[serveMapSide]]) the
-    * candidates come from the once-per-pin broadcast [[CellMap]] of
-    * `corpus` and the winner is `array_max`/`array_min` over them: a
+    * is literally a new plan. With `mapSide`
+    * ([[graft.Pins.broadcastable]] on `corpus`) the candidates come
+    * from the once-per-pin broadcast [[CellMap]] of `corpus` and the
+    * winner is `array_max`/`array_min` over them: a
     * stateless projection, append mode; an empty candidate set has no
     * winner and emits no row. Without it, one stream-static equi-join
     * on the probed cell and a top-1 aggregation windowed on the query's
@@ -875,9 +824,9 @@ object StreamingIndex {
     * an interleaved split would silently late-drop in-flight queries
     * behind v1's final watermark (exactly the bug class this rig
     * exists to pin). Both phases take ONE size-gate regime
-    * ([[serveMapSide]] must admit both pins for the map-side plan), so
-    * the restart never changes the state schema — none under the
-    * ceiling, the same windowed agg and key above it — which is what
+    * ([[graft.Pins.broadcastable]] must admit both pins for the
+    * map-side plan), so the restart never changes the state schema —
+    * none map-side, the same windowed agg and key when keyed — which is what
     * Spark requires of a checkpoint-compatible upgrade; the upstream
     * literal/static-side swap is the allowed kind of plan change. Oracle: v1's chain
     * answers the first third, v2's chain the rest — both training
@@ -891,8 +840,8 @@ object StreamingIndex {
     val (cenB, cellsB) = Similarity.ivfIndex(s, d)
     val corpusA = servingCorpus(s, d, cellsA, "serve_pre")
     val corpusB = servingCorpus(s, d, cellsB, "serve")
-    val mapSide = serveMapSide(s, d, "serve_pre", corpusA) &&
-      serveMapSide(s, d, "serve", corpusB)
+    val mapSide = graft.Pins.broadcastable(s, corpusA) &&
+      graft.Pins.broadcastable(s, corpusB)
     val ordered = panel.sortBy(_.vec_id).zipWithIndex
     val np = ordered.size
     // contiguous rank thirds: t0 served by v1; t1 arrives during the
@@ -957,7 +906,7 @@ object StreamingIndex {
         // pinned so the result outlives the temp sink dirs deleted below
         readPhase(1, out1).unionByName(readPhase(2, out2))
           .orderBy("version", "qid")
-          .localCheckpoint()
+          .transform(graft.Pins.checkpoint)
       } finally {
         // a multi-rep bench loop would otherwise leave three temp dirs
         // per invocation behind for the life of the machine
@@ -1073,9 +1022,9 @@ object StreamingIndex {
     * code row — the corpus's floats are never touched. The top-1
     * (dist ASC, vec_id ASC via min-of-struct) over the probed cells'
     * coded candidates is [[sAnnServe]]'s size-gated shape: map-side
-    * against the once-per-pin [[CellMap]] of code rows under the
-    * ceiling (stateless, append), the stream-static equi-join on the
-    * probed cell plus the watermarked windowed min above it (per-query
+    * against the once-per-pin [[CellMap]] of code rows within the
+    * threshold (stateless, append), the stream-static equi-join on the
+    * probed cell plus the watermarked windowed min over it (per-query
     * state expires instead of accumulating for the life of the
     * serving process). Fully oracled: the shared IVF + PQ +
     * composed-ADC CTEs replay probe, table, and ranking — every
@@ -1127,7 +1076,7 @@ object StreamingIndex {
         id.as("vec_id")),
       lowest = true,
       top => Seq(top.getField("vec_id").as("vec_id"), top.getField("dist").as("dist")))
-    val mapSide = serveMapSide(s, d, "pq_coded", corpus)
+    val mapSide = graft.Pins.broadcastable(s, corpus)
     runServe(s, "s_ivfpq_serve", vecPanel(s, d), mapSide)(
       serveTop1Plan(s, _, d, "ivf", cen, "pq_coded", corpus, mapSide, nProbe = 2, adc))
       .orderBy("qid")
@@ -1141,26 +1090,26 @@ object StreamingIndex {
     * existing doc flags the arrival as a near-dup candidate before it
     * is admitted to the corpus. Emitted rows are the (arrival,
     * existing) candidate pairs, size-gated ([[neardupGatePlan]]):
-    *  - under [[NeardupBroadcastMaxDocs]] corpus docs, ONE map-side
+    *  - when the band pin is [[graft.Pins.broadcastable]], ONE map-side
     *    lookup of the arrival's band array against the once-per-pin
     *    sketch map returns its sorted distinct dup ids — a stateless
     *    projection, append mode with no watermark: no join, no
     *    Exchange, no state store;
-    *  - above it the hint is withheld and the plan becomes a shuffled
-    *    equi-join sharded by band_key (an unconditional broadcast
-    *    would ship the whole corpus sketch to every executor, an OOM
-    *    rather than a plan choice), with the per-band pairs collapsed
-    *    by a dropDuplicatesWithinWatermark over the arrival stamp —
+    *  - over the threshold the plan is an unhinted equi-join on
+    *    band_key (an unconditional broadcast would ship the whole
+    *    corpus sketch to every executor, an OOM rather than a plan
+    *    choice), with the per-band pairs collapsed by a
+    *    dropDuplicatesWithinWatermark over the arrival stamp —
     *    state O(candidate pairs WITHIN THE WATERMARK), never O(corpus)
-    *    or O(stream lifetime). The above-ceiling plan the micro-batch
+    *    or O(stream lifetime). The keyed plan the micro-batch
     *    actually picks broadcasts the per-batch PROBE side into the
     *    sharded corpus, so the gate's Zipf-hot band keys never
     *    serialize into one task — measured, with the salted fallback
     *    for the giant-batch corner ([[NeardupSaltBuckets]],
     *    NEARDUP_SKEW.json).
-    * RE-ARRIVAL CONTRACT under the ceiling: emission is per ARRIVAL —
-    * a doc_id that arrives again (a re-send, in a later batch) emits
-    * its distinct pairs again, once per arrival. Above the ceiling the
+    * RE-ARRIVAL CONTRACT map-side: emission is per ARRIVAL — a doc_id
+    * that arrives again (a re-send, in a later batch) emits its
+    * distinct pairs again, once per arrival. In the keyed regime the
     * watermarked dedup keys on (doc_id, dup_id), so a re-arrival
     * inside the watermark emits nothing (spec-pinned in both regimes).
     * The rig feeds each doc once, so both regimes emit the same rows.
@@ -1168,24 +1117,24 @@ object StreamingIndex {
     * the same portable md5 hash family. */
   def sNeardupGate(s: SparkSession, d: String): DataFrame =
     neardupGate(s, d, "s_neardup_gate",
-      Dedup.md5BandIndex(s, d, graft.operators.IndexStore.BandK),
-      docEvents(s, d).length.toLong, d, "band_gate")
+      Dedup.md5BandIndex(s, d, graft.operators.IndexStore.BandK), d, "band_gate")
 
   /** The near-dup gate's per-arrival plan over `arrivals` (doc_id,
-    * text): map-side and stateless under the ceiling, the keyed join
-    * plus watermarked (doc_id, dup_id) dedup above it — see
-    * [[sNeardupGate]]. Append mode in both regimes. `corpus`, `nDocs`
-    * and `dir` are [[neardupCandidatePairs]]'s; `mapVariant` keys the
-    * once-per-pin band map. */
+    * text): map-side and stateless when `corpus` is
+    * [[graft.Pins.broadcastable]], the keyed join plus watermarked
+    * (doc_id, dup_id) dedup otherwise — see [[sNeardupGate]]. Append
+    * mode in both regimes. `corpus` and `dir` are
+    * [[neardupCandidatePairs]]'s; `mapVariant` keys the once-per-pin
+    * band map. */
   private[graft] def neardupGatePlan(s: SparkSession, d: String,
-      arrivals: DataFrame, corpus: DataFrame, nDocs: Long, dir: String,
+      arrivals: DataFrame, corpus: DataFrame, dir: String,
       mapVariant: String): DataFrame = {
     val probes = Dedup.md5BandArrays(
       arrivals.select(col("doc_id"), split(col("text"), " ").as("tk")),
       graft.operators.IndexStore.BandK)
-    val pairs = neardupCandidatePairs(s, probes, corpus, nDocs, dir,
+    val pairs = neardupCandidatePairs(s, probes, corpus, dir,
       Some(() => pinnedBandMap(s, d, mapVariant, corpus)))
-    if (nDocs <= neardupLimit(s)) pairs
+    if (graft.Pins.broadcastable(s, corpus)) pairs
     else pairs
       // +1 day: the initial watermark is epoch 0 and the late-row
       // filter drops rows AT the watermark, so a doc_id-0 arrival
@@ -1199,7 +1148,7 @@ object StreamingIndex {
   /** Drive a near-dup gate rig: every corpus doc arrives once, through
     * the staggered feed, into a memory table. */
   private def neardupGate(s: SparkSession, d: String, rig: String,
-      corpus: DataFrame, nDocs: Long, dir: String, mapVariant: String): DataFrame = {
+      corpus: DataFrame, dir: String, mapVariant: String): DataFrame = {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     val docs = docEvents(s, d)
@@ -1207,7 +1156,7 @@ object StreamingIndex {
       val input = MemoryStream[DocEvent]
       val name = s"${rig}_${nameCounter.incrementAndGet()}"
       val q = withLazyEviction(s) {
-        neardupGatePlan(s, d, input.toDF(), corpus, nDocs, dir, mapVariant)
+        neardupGatePlan(s, d, input.toDF(), corpus, dir, mapVariant)
           .writeStream.format("memory").queryName(name)
           .outputMode("append").start()
       }
@@ -1219,35 +1168,28 @@ object StreamingIndex {
     }
   }
 
-  /** Posting-count ceiling under which [[sSubstringGate]] broadcasts
-    * the gram index. Arithmetic: a posting is (8-byte h, ~60 B gram
-    * text, 8-byte doc_id) ≈ 80 B, so 4M postings ≈ 320 MB — about the
-    * most a serving executor should pin. Above it the hint is withheld
-    * and — exactly the [[sNeardupGate]] story the NEARDUP_SKEW verdict
-    * measured — the planner broadcasts the tiny per-batch PROBE side
-    * into the sharded corpus index (BuildLeft, plan-guarded): arrivals
-    * travel, the corpus stays put, and boilerplate-hot grams (the
-    * gate's target population) never key-partition into one task.
-    * Overridable via conf `graft.substring.broadcastMaxPostings`. */
-  private[graft] val SubstringBroadcastMaxPostings = 1L << 22
-
   /** The (arrival, existing) exact-gram collision pairs for
     * [[sSubstringGate]]: equi-join on (h, gtext) — the 8-byte hash
     * leads, the text column makes the match EXACT (a 60-bit collision
     * cannot fake a duplicate; the batch tier's contract). Size-gated
-    * like [[neardupCandidatePairs]]; all shapes emit identical rows
-    * over the same index content. Same `dir` CONTRACT as
+    * like [[neardupCandidatePairs]]: map-side against a `postingMap`
+    * when `corpus` is [[graft.Pins.broadcastable]], otherwise an
+    * unhinted join, where — exactly the [[sNeardupGate]] story the
+    * NEARDUP_SKEW verdict measured — the planner broadcasts the tiny
+    * per-batch PROBE side into the sharded index (BuildLeft,
+    * plan-guarded): arrivals travel, the corpus stays put, and
+    * boilerplate-hot grams never key-partition into one task. All
+    * shapes emit identical rows over the same index content. Same
+    * `dir` CONTRACT as
     * [[neardupCandidatePairs]]: a non-empty `dir` under
     * `graft.index.durable` replaces `corpus` with a durable table
     * rebuilt from `dir` ([[graft.operators.Corpus.gramRows]] — the one
     * gram definition, so no k to drift here), and `=updated` probes
     * base ∪ admitted instead of the full corpus. */
   private[graft] def substringCandidatePairs(
-      s: SparkSession, probes: DataFrame, corpus: DataFrame, nPostings: Long,
+      s: SparkSession, probes: DataFrame, corpus: DataFrame,
       dir: String = "",
       postingMap: Option[() => Broadcast[PostingMap]] = None): DataFrame = {
-    val limit = s.conf.getOption("graft.substring.broadcastMaxPostings")
-      .map(_.toLong).getOrElse(SubstringBroadcastMaxPostings)
     val cond = col("s.h") === col("c.h") &&
       col("s.gtext") === col("c.gtext") &&
       col("s.doc_id") =!= col("c.doc_id")
@@ -1271,7 +1213,7 @@ object StreamingIndex {
       col("s.doc_id") =!= col("c.doc_id")
     def slim(df: DataFrame): DataFrame =
       df.select(col("ghash"), col("doc_id"))
-    // Above the ceiling the probe-side broadcast is left to planner
+    // In the join regime the probe-side broadcast is left to planner
     // ESTIMATES on purpose — round-11 advice suggested an explicit
     // broadcast(probes) hint so the BuildLeft shape is guaranteed, and
     // the round-12 ×10 stress REFUTED it: the per-batch probe side is
@@ -1279,7 +1221,7 @@ object StreamingIndex {
     // forced broadcast OOM'd the heap collecting task results for the
     // driver-side build (s_substring_gate ×10, heap exhaustion in
     // DirectTaskResult serialization) — the exact "an OOM rather than
-    // a plan choice" failure the neardup ceiling exists to prevent.
+    // a plan choice" failure the neardup size gate exists to prevent.
     // Estimate-driven is the OOM-safe adaptive behavior: the planner
     // broadcasts the per-batch probe side while it is bounded
     // (BuildLeft, plan-guarded at realistic batch sizes) and degrades
@@ -1295,7 +1237,7 @@ object StreamingIndex {
     // batch — the round-12 carried perf item. "updated" probes
     // base ∪ admitted (the increment regime); "true" the full corpus.
     val durable = s.conf.getOption("graft.index.durable")
-    // Under the ceiling with a caller-supplied posting map: probe the
+    // A broadcastable pin with a caller-supplied posting map: probe the
     // once-per-pin broadcast MAP-SIDE instead of re-broadcasting the
     // posting relation every trigger (see [[pinnedPostingMap]]). The
     // UDF returns every matching posting doc id ≠ the probe doc —
@@ -1304,18 +1246,14 @@ object StreamingIndex {
     // per-batch arrival grams, so the non-codegen boundary costs
     // microseconds where the per-trigger broadcast build cost
     // hundreds of ms (guide §8's manual-broadcast pattern).
-    if (nPostings <= limit && hashed && postingMap.isDefined) {
+    if (hashed && postingMap.isDefined && graft.Pins.broadcastable(s, corpus)) {
       val bc = postingMap.get.apply()
       val probe = udf((k: Array[Byte], self: Long) => bc.value.lookup(k, self))
       return probes
         .select(col("doc_id"), explode(probe(col("ghash"), col("doc_id"))).as("dup_id"))
     }
     val joined =
-      if (nPostings <= limit)
-        if (hashed)
-          probes.as("s").join(broadcast(slim(corpus)).as("c"), condHash)
-        else probes.as("s").join(broadcast(corpus).as("c"), cond)
-      else if (dir.nonEmpty && durable.contains("updated2"))
+      if (dir.nonEmpty && durable.contains("updated2"))
         probes.as("s")
           .join(graft.operators.IndexStore.durableGramUpd2(s, dir).as("c"), cond)
       else if (dir.nonEmpty && durable.contains("updated"))
@@ -1348,12 +1286,12 @@ object StreamingIndex {
     * DIFFERENT existing doc flags the arrival. Emitted rows are the
     * (arrival, existing) candidate pairs, deduplicated across an
     * arrival's own grams by the watermark-bounded
-    * dropDuplicatesWithinWatermark state the near-dup gate keeps above
-    * its ceiling (state is O(pairs within the watermark), never
+    * dropDuplicatesWithinWatermark state the near-dup gate keeps in its
+    * keyed regime (state is O(pairs within the watermark), never
     * O(corpus)). The
-    * index side is SIZE-GATED ([[substringCandidatePairs]]): under
-    * [[SubstringBroadcastMaxPostings]] the postings broadcast (zero
-    * per-batch shuffle); above it the per-batch probe side broadcasts
+    * index side is SIZE-GATED ([[substringCandidatePairs]]): within the
+    * broadcast threshold the postings probe map-side (zero per-batch
+    * shuffle); over it the per-batch probe side broadcasts
     * into the sharded index (BuildLeft — plan-guarded, the
     * NEARDUP_SKEW-validated shape). Oracle: the symmetric exact-gram
     * collision pairs replayed in DuckDB over the same gram windows
@@ -1370,7 +1308,6 @@ object StreamingIndex {
       graft.operators.Corpus.gramIndex(s, d)
         .select(col("doc_id"), gramKey.as("ghash"))
     }
-    val nPostings = pinnedCount(s, d, "n_gram_gate")(corpus.count())
     val docs = docEvents(s, d)
     EventPairing.withStreamingPartitions(s) {
       val input = MemoryStream[DocEvent]
@@ -1380,7 +1317,7 @@ object StreamingIndex {
         input.toDF().select(col("doc_id"), split(col("text"), " ").as("tk")))
         .select(col("doc_id"), col("gtext"), col("h"))
         .withColumn("ghash", gramKey)
-      val gated = substringCandidatePairs(s, probes, corpus, nPostings, d,
+      val gated = substringCandidatePairs(s, probes, corpus, d,
         Some(() => pinnedPostingMap(s, d, "gram_gate", corpus)))
         // +1 day: the initial watermark is epoch 0 and the late-row
         // filter drops rows AT the watermark (see sNeardupGate)
@@ -1416,8 +1353,8 @@ object StreamingIndex {
     * though that doc is absent from the base split — both spec-pinned
     * on a crafted fixture. The loaded table relation is passed as the
     * corpus side directly (it IS the bucketed scan), so every
-    * size-gate regime serves the same base ∪ admitted rows: under the
-    * posting ceiling the table broadcasts; above it the join reads
+    * size-gate regime serves the same base ∪ admitted rows: within the
+    * threshold the pin probes map-side; over it the join reads
     * the appended BUCKETED table with zero static-side exchange — the
     * bucket spec is table metadata and survives the append
     * (plan-guarded). Existing gates switch to this index via
@@ -1433,14 +1370,13 @@ object StreamingIndex {
     // bucketed table per trigger — measured 14.0 s vs the session-pin
     // gate's 9.8 s at sf0.1. The pin is the standard serving-tier move
     // (sAnnServe); the dirStamp fingerprint displaces it with the
-    // table. The durable above-ceiling path (conf regime) still reads
+    // table. The durable keyed path (conf regime) still reads
     // the bucketed scan — that is the exchange-free degraded shape,
     // not this rig's broadcast regime.
     val corpus = pinnedCorpus(s, d, "gram_upd") {
       graft.operators.IndexStore.durableGramUpd(s, d)
         .select(col("doc_id"), gramKey.as("ghash"))
     }
-    val nPostings = pinnedCount(s, d, "n_gram_upd")(corpus.count())
     val docs = docEvents(s, d)
     EventPairing.withStreamingPartitions(s) {
       val input = MemoryStream[DocEvent]
@@ -1451,7 +1387,7 @@ object StreamingIndex {
       // dir = "" on purpose: the corpus relation IS the updated table;
       // a conf-selected diversion to the full-corpus table would
       // silently change this row's declared content
-      val gated = substringCandidatePairs(s, probes, corpus, nPostings, "",
+      val gated = substringCandidatePairs(s, probes, corpus, "",
         Some(() => pinnedPostingMap(s, d, "gram_upd", corpus)))
         .withColumn("ts", timestamp_seconds(col("doc_id") + lit(86400L)))
         .withWatermark("ts", "10 minutes")
@@ -1489,7 +1425,6 @@ object StreamingIndex {
       graft.operators.IndexStore.durableGramUpd2(s, d)
         .select(col("doc_id"), gramKey.as("ghash"))
     }
-    val nPostings = pinnedCount(s, d, "n_gram_upd2")(corpus.count())
     val docs = docEvents(s, d)
     EventPairing.withStreamingPartitions(s) {
       val input = MemoryStream[DocEvent]
@@ -1499,7 +1434,7 @@ object StreamingIndex {
         .withColumn("ghash", gramKey)
       // dir = "" on purpose: the corpus relation IS the updated2 table
       // (the sSubstringGateUpd contract)
-      val gated = substringCandidatePairs(s, probes, corpus, nPostings, "",
+      val gated = substringCandidatePairs(s, probes, corpus, "",
         Some(() => pinnedPostingMap(s, d, "gram_upd2", corpus)))
         .withColumn("ts", timestamp_seconds(col("doc_id") + lit(86400L)))
         .withWatermark("ts", "10 minutes")
@@ -1534,11 +1469,9 @@ object StreamingIndex {
       graft.operators.IndexStore.durableBandUpd(s, d)
         .select(col("doc_id"), col("band"), col("band_key"))
     }
-    val nDocs = pinnedCount(s, d, "n_band_upd")(
-      corpus.select(col("doc_id")).distinct().count())
     // dir = "" on purpose: the corpus relation IS the updated table
     // (see sSubstringGateUpd)
-    neardupGate(s, d, "s_neardup_gate_upd", corpus, nDocs, "", "band_upd")
+    neardupGate(s, d, "s_neardup_gate_upd", corpus, "", "band_upd")
   }
 
   /** s_neardup_gate_upd2 — [[sSubstringGateUpd2]]'s sketch-tier twin:
@@ -1552,47 +1485,36 @@ object StreamingIndex {
       graft.operators.IndexStore.durableBandUpd2(s, d)
         .select(col("doc_id"), col("band"), col("band_key"))
     }
-    val nDocs = pinnedCount(s, d, "n_band_upd2")(
-      corpus.select(col("doc_id")).distinct().count())
     // dir = "" on purpose: the corpus relation IS the updated2 table
-    neardupGate(s, d, "s_neardup_gate_upd2", corpus, nDocs, "", "band_upd2")
+    neardupGate(s, d, "s_neardup_gate_upd2", corpus, "", "band_upd2")
   }
 
   /** The (arrival, existing) EXACT-duplicate pairs for
     * [[sCorpusIngest]]: equi-join of the arrival's md5(text) against
     * the corpus content-hash index — the cheapest admission tier
     * (q_dedup_exact's key, streamed). Size-gated like the other tiers:
-    * under [[NeardupBroadcastMaxDocs]] corpus docs the (doc_id, md5)
-    * index broadcasts; above it the hint is withheld and planner
+    * a [[graft.Pins.broadcastable]] (doc_id, md5) pin with an `md5Map`
+    * probes map-side; otherwise an unhinted join, where planner
     * estimates broadcast the bounded per-batch probe side (the
     * [[substringCandidatePairs]] shape — md5 keys of mass-duplicated
     * boilerplate are exactly as Zipf-hot as band keys, so the corpus
     * must stay sharded and the arrivals travel; an UNCONDITIONAL
     * probe hint OOMs on giant batches, see substringCandidatePairs).
-    * The exact tier has its OWN conf key (`graft.exact.broadcastMaxDocs`
-    * — round-12 advice: retuning the neardup knob silently re-planned
-    * this tier too), defaulting to the neardup value so existing
-    * configurations keep their behavior. All shapes emit identical
-    * rows. */
+    * All shapes emit identical rows. */
   private[graft] def exactCandidatePairs(
-      s: SparkSession, probes: DataFrame, corpus: DataFrame, nDocs: Long,
+      s: SparkSession, probes: DataFrame, corpus: DataFrame,
       md5Map: Option[() => Broadcast[KeyedDocsMap]] = None): DataFrame = {
-    val limit = s.conf.getOption("graft.exact.broadcastMaxDocs")
-      .orElse(s.conf.getOption("graft.neardup.broadcastMaxDocs"))
-      .map(_.toLong).getOrElse(NeardupBroadcastMaxDocs)
-    // under the ceiling with a caller-supplied md5 map: the
+    // a broadcastable pin with a caller-supplied md5 map: the
     // once-per-pin broadcast probe (see [[pinnedKeyedMap]])
-    if (nDocs <= limit && md5Map.isDefined) {
+    if (md5Map.isDefined && graft.Pins.broadcastable(s, corpus)) {
       val bc = md5Map.get.apply()
       val probe = udf((k: String, self: Long) => bc.value.lookup(k, self))
       return probes
         .select(col("doc_id"), explode(probe(col("h"), col("doc_id"))).as("dup_id"))
     }
     val cond = col("s.h") === col("c.h") && col("s.doc_id") =!= col("c.doc_id")
-    val joined =
-      if (nDocs <= limit) probes.as("s").join(broadcast(corpus).as("c"), cond)
-      else probes.as("s").join(corpus.as("c"), cond)
-    joined.select(col("s.doc_id").as("doc_id"), col("c.doc_id").as("dup_id"))
+    probes.as("s").join(corpus.as("c"), cond)
+      .select(col("s.doc_id").as("doc_id"), col("c.doc_id").as("dup_id"))
   }
 
   /** s_corpus_ingest — the COMPOSED streaming admission path: the five
@@ -1706,13 +1628,7 @@ object StreamingIndex {
         }
         (band, gram, md5I, "", s"gram_$tag", tag)
     }
-    val nPostings = pinnedCount(s, d, s"n_gram_ingest_$tierTag")(gramIdx.count())
     val docs = docEvents(s, d).sortBy(_.doc_id)
-    // size gates price the INDEX side (= the corpus in the frozen
-    // regime; the possibly smaller base ∪ admitted set under
-    // updated/updated2)
-    val nDocs = pinnedCount(s, d, s"n_md5_ingest_$tierTag")(
-      md5Idx.select(col("doc_id")).distinct().count())
     // the novel re-sent burst: same synthetic content under two block
     // ids, arriving after the corpus replay (id order = arrival order)
     val rb = ArrivalDedup.ResentBase
@@ -1739,21 +1655,20 @@ object StreamingIndex {
           .select(col("doc_id"), lit("quality").as("reason"))
         val exact = exactCandidatePairs(s,
           arr.select(col("doc_id"), md5(col("text").cast("binary")).as("h")),
-          md5Idx, nDocs,
-          Some(() => md5Map))
+          md5Idx, Some(() => md5Map))
           .select(col("doc_id"), lit("exact").as("reason"))
         val substr = substringCandidatePairs(s,
           graft.operators.Corpus.gramRows(
             arr.select(col("doc_id"), split(col("text"), " ").as("tk")))
             .select(col("doc_id"), col("gtext"), col("h"))
             .withColumn("ghash", gramKey),
-          gramIdx, nPostings, innerDir,
+          gramIdx, innerDir,
           Some(() => pinnedPostingMap(s, d, gramVariant, gramIdx)))
           .select(col("doc_id"), lit("substring").as("reason"))
         val near = neardupCandidatePairs(s,
           Dedup.md5BandArrays(
             arr.select(col("doc_id"), split(col("text"), " ").as("tk")), k),
-          bandIdx, nDocs, innerDir,
+          bandIdx, innerDir,
           Some(() => pinnedBandMap(s, d, s"band_$tierTag", bandIdx)))
           .select(col("doc_id"), lit("neardup").as("reason"))
         val fourLegs = quality.unionByName(exact)
@@ -1764,18 +1679,16 @@ object StreamingIndex {
           .select(col("doc_id"), col("reason"))
         // corpus-tier precedence: content the corpus holds never
         // enters arrival state (the 'exact' screen owns it). Under the
-        // exact tier's ceiling the anti-join rides the SAME once-per-pin
-        // md5 map as the exact tier (a left_anti semi-probe is a set
-        // membership test — the third per-trigger broadcast this rig
-        // used to rebuild); above it the join stays for the planner.
-        val exactLimit = s.conf.getOption("graft.exact.broadcastMaxDocs")
-          .orElse(s.conf.getOption("graft.neardup.broadcastMaxDocs"))
-          .map(_.toLong).getOrElse(NeardupBroadcastMaxDocs)
+        // exact tier's map-side regime the anti-join rides the SAME
+        // once-per-pin md5 map as the exact tier (a left_anti semi-probe
+        // is a set membership test — the third per-trigger broadcast
+        // this rig used to rebuild); otherwise the join stays for the
+        // planner.
         val preceded = {
           val base = arr.select(col("doc_id"),
             md5(col("text").cast("binary")).as("key"), tsCol.as("ts"))
             .withWatermark("ts", "10 minutes")
-          if (nDocs <= exactLimit) {
+          if (graft.Pins.broadcastable(s, md5Idx)) {
             val bc = md5Map
             val known = udf((k: String) => bc.value.contains(k))
             base.filter(!known(col("key")))

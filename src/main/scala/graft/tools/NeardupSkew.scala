@@ -80,14 +80,19 @@ object NeardupSkew {
     val shareH = maxBandShare(hot)
     println(f"[ndskew] max band-key share: uniform=$shareU%.4f hot=$shareH%.4f")
 
-    val plans = Seq(
-      ("broadcast", Map.empty[String, String]),
+    // the keyed regime: a broadcast threshold one byte under the band
+    // pin's measured size withholds the map-side probe while the
+    // planner stays free to broadcast the small per-batch probe side
+    def keyed(dir: String): Map[String, String] = Map(
+      "spark.sql.autoBroadcastJoinThreshold" ->
+        (graft.operators.Dedup.md5BandIndex(spark, dir, 16)
+          .queryExecution.optimizedPlan.stats.sizeInBytes - 1).toString)
+    val plans = Seq[(String, String => Map[String, String])](
+      ("broadcast", _ => Map.empty),
       // saltBuckets set EXPLICITLY: the shipped default is 1 (salt
       // off, the measured decision), so the salted regime must ask
-      ("shuffled_salted", Map("graft.neardup.broadcastMaxDocs" -> "0",
-        "graft.neardup.saltBuckets" -> "32")),
-      ("shuffled_bare", Map("graft.neardup.broadcastMaxDocs" -> "0",
-        "graft.neardup.saltBuckets" -> "1")))
+      ("shuffled_salted", dir => keyed(dir) + ("graft.neardup.saltBuckets" -> "32")),
+      ("shuffled_bare", dir => keyed(dir) + ("graft.neardup.saltBuckets" -> "1")))
 
     def time(dir: String, confs: Map[String, String]): Option[Double] = {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -103,10 +108,10 @@ object NeardupSkew {
       } finally confs.keys.foreach(spark.conf.unset)
     }
 
-    time(uniform, plans.head._2) // warmup (also builds/caches the band index)
+    time(uniform, Map.empty) // warmup (also builds/caches the band index)
     val rows = for ((corpus, dir) <- Seq(("uniform", uniform), ("hot", hot));
         (plan, confs) <- plans) yield {
-      val t = time(dir, confs)
+      val t = time(dir, confs(dir))
       println(f"[ndskew] $corpus%-8s $plan%-16s ${t.getOrElse(-1.0)}%8.2f s")
       (corpus, plan, t)
     }
@@ -142,9 +147,10 @@ object NeardupSkew {
       .repartition(32).write.mode("overwrite").parquet(s"$hotJ/documents.parquet")
     val nJoinActual = spark.read.parquet(s"$uniformJ/documents.parquet").count()
     println(s"[ndskew] join corpus: $nJoinActual docs ($copies copies of $nBase)")
-    // Four regimes ({auto, forced-SMJ} × {bare, salted R=32}), all with
-    // broadcastMaxDocs=0 (the corpus hint withheld). `auto` is the plan
-    // the gate actually executes above the ceiling: the planner
+    // Four regimes ({auto, forced-SMJ} × {bare, salted R=32}), all
+    // through the unhinted join (no band map is passed). `auto` is the
+    // plan the gate executes when the band pin is over the threshold:
+    // the planner
     // broadcasts the small PROBE side (verified BuildLeft), so emission
     // parallelism follows the corpus's storage partitioning and band-
     // key heat never serializes — the salt only bloats the broadcast
@@ -152,13 +158,10 @@ object NeardupSkew {
     // over threshold → genuinely key-partitioned): the hot keys
     // serialize into k/4 tasks and the salt is the fix.
     val joinPlans = Seq(
-      ("auto_bare", Map("graft.neardup.broadcastMaxDocs" -> "0")),
-      ("auto_salted", Map("graft.neardup.broadcastMaxDocs" -> "0",
-        "graft.neardup.saltBuckets" -> "32")),
-      ("smj_bare", Map("graft.neardup.broadcastMaxDocs" -> "0",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1")),
-      ("smj_salted", Map("graft.neardup.broadcastMaxDocs" -> "0",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      ("auto_bare", Map.empty[String, String]),
+      ("auto_salted", Map("graft.neardup.saltBuckets" -> "32")),
+      ("smj_bare", Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")),
+      ("smj_salted", Map("spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "graft.neardup.saltBuckets" -> "32")),
       // the BATCH dedup family's regime: the same key-partitioned band
       // self-join shape, but AQE is free to re-plan — its skew-join
@@ -166,8 +169,7 @@ object NeardupSkew {
       // valid for inner joins), which is exactly the remedy the
       // STREAMING gate cannot get (stateful queries never re-plan;
       // that asymmetry is the salt's whole justification)
-      ("aqe_smj_bare", Map("graft.neardup.broadcastMaxDocs" -> "0",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      ("aqe_smj_bare", Map("spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.enabled" -> "true",
         "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")),
       // isolate WHICH adaptive behavior hurts: skew-split keys on
@@ -175,8 +177,7 @@ object NeardupSkew {
       // 729M pairs out — invisible), while partition COALESCING merges
       // the small-input partitions and concentrates the hot keys into
       // fewer tasks
-      ("aqe_nocoalesce_smj_bare", Map("graft.neardup.broadcastMaxDocs" -> "0",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      ("aqe_nocoalesce_smj_bare", Map("spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.enabled" -> "true",
         "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
         "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")))
@@ -187,7 +188,7 @@ object NeardupSkew {
       try Some((1 to reps).map { _ =>
         val t0 = System.nanoTime()
         graft.streaming.StreamingIndex
-          .neardupCandidatePairs(spark, idx, idx, nJoin.toLong)
+          .neardupCandidatePairs(spark, idx, idx)
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }.min)

@@ -264,17 +264,14 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(graft.streaming.StreamingIndex.stateOpNames.get("s_vector_ingest").isEmpty)
   }
 
-  /** Run `body` in the ABOVE-ceiling regime of the serve and gate
-    * rigs (both size-gate ceilings at 0): the keyed joins with their
-    * windowed top-1 / watermarked dedup — where their state lives. */
+  /** Run `body` in the KEYED regime of the serve and gate rigs (the
+    * broadcast threshold at -1, so no pin is broadcastable): the keyed
+    * joins with their windowed top-1 / watermarked dedup — where their
+    * state lives. */
   private def aboveCeiling[T](body: => T): T = {
-    spark.conf.set("graft.serve.broadcastMaxVectors", "0")
-    spark.conf.set("graft.neardup.broadcastMaxDocs", "0")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try body
-    finally {
-      spark.conf.unset("graft.serve.broadcastMaxVectors")
-      spark.conf.unset("graft.neardup.broadcastMaxDocs")
-    }
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("serve/gate under the ceiling: stateless micro-batches — zero state rows, no state operator") {
@@ -720,14 +717,13 @@ class IndexLifecycleSpec extends SparkSpec {
       smallPlan.toString)
     assert(smallPlan.collectFirst { case j: BaseJoinExec => j }.isEmpty,
       smallPlan.toString)
-    // force the 100 TB branch: above the ceiling the hint must be
-    // WITHHELD — an unconditional broadcast ships the whole corpus
+    // force the 100 TB branch: over the threshold the corpus is never
+    // hinted — an unconditional broadcast ships the whole corpus
     // sketch to every executor (an OOM, not a plan choice). The
     // planner may still broadcast the tiny per-batch STREAM side
     // (scale-correct: arrivals travel, the sharded corpus stays put);
-    // what must never happen above threshold is the corpus being built
-    spark.conf.set("graft.neardup.broadcastMaxDocs", "0")
-    // at spec scale the corpus sketch is a few hundred KB, so on a DATA
+    // what must never happen above threshold is the corpus being built.
+    // At spec scale the corpus sketch is a few hundred KB, so on a DATA
     // batch the planner may legitimately pick it as the broadcast build
     // (it really is the smaller side here). At the corpus sizes the
     // ceiling models, its estimate forbids that choice — reproduce that
@@ -761,7 +757,6 @@ class IndexLifecycleSpec extends SparkSpec {
       assert(salted == small)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
-      spark.conf.unset("graft.neardup.broadcastMaxDocs")
       spark.conf.unset("graft.neardup.saltBuckets")
     }
   }
@@ -797,12 +792,19 @@ class IndexLifecycleSpec extends SparkSpec {
       smallPlan.toString)
     assert(smallPlan.collectFirst { case r: RDDScanExec => r }.isEmpty,
       smallPlan.toString)
-    // ABOVE the gate the hint must be WITHHELD — an unconditional
+    // OVER the threshold the corpus is never hinted — an unconditional
     // broadcast ships the full serving corpus to every executor at
     // 100 TB. The planner may still broadcast the tiny per-batch STREAM
     // side; what must never happen above threshold is the corpus being
-    // built. Emitted rows are identical either way.
-    spark.conf.set("graft.serve.broadcastMaxVectors", "0")
+    // built. A threshold one byte under the serving pin's measured size
+    // (the same rows pinned again measure the same) takes the keyed
+    // regime while leaving the planner free to broadcast the stream.
+    // Emitted rows are identical either way.
+    val (_, cells) = graft.operators.Similarity.ivfIndex(spark, d)
+    val pinBytes = Pins.checkpoint(graft.Tables.embeddings(spark, d).join(cells, "vec_id")
+      .select(col("vec_id"), col("embedding"), col("cell")))
+      .queryExecution.optimizedPlan.stats.sizeInBytes
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (pinBytes - 1).toString)
     try {
       val big = SparkEntry.queries("s_ann_serve")(spark, d)
         .select("qid", "vec_id").as[(Long, Long)].collect().toSeq
@@ -810,7 +812,7 @@ class IndexLifecycleSpec extends SparkSpec {
       assert(!corpusIsBuildSide(bigPlan), bigPlan.toString)
       assert(big == small)
       assert(big.nonEmpty)
-    } finally spark.conf.unset("graft.serve.broadcastMaxVectors")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("s_neardup_gate: salting is LOSSLESS on the population it exists for — a boilerplate-hot corpus") {
@@ -835,16 +837,16 @@ class IndexLifecycleSpec extends SparkSpec {
     def run(): Seq[(Long, Long)] =
       SparkEntry.queries("s_neardup_gate")(spark, dir)
         .select("doc_id", "dup_id").as[(Long, Long)].collect().toSeq
-    assert(run() == want) // broadcast regime (12 docs < ceiling)
-    spark.conf.set("graft.neardup.broadcastMaxDocs", "0")
+    assert(run() == want) // map-side regime (the 12-doc pin is broadcastable)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      assert(run() == want) // above-ceiling default (bare, probe-broadcast)
+      assert(run() == want) // keyed regime default (bare)
       spark.conf.set("graft.neardup.saltBuckets", "5") // R ∤ and ∤ by doc count
       assert(run() == want)
       spark.conf.set("graft.neardup.saltBuckets", "32")
       assert(run() == want)
     } finally {
-      spark.conf.unset("graft.neardup.broadcastMaxDocs")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.unset("graft.neardup.saltBuckets")
     }
   }
@@ -866,10 +868,16 @@ class IndexLifecycleSpec extends SparkSpec {
     val queries = Seq((100L, Seq(1f, 0.2f)), (3L, Seq(2f, 2f)),
       (7L, Seq(-1f, 0.1f)), (200L, Seq(1f, 0.5f))).toDF("vec_id", "embedding")
     val d = fixtureDir("embeddings" -> corpus)
+    val pin = Pins.checkpoint(corpus)
+    val pinBytes = pin.queryExecution.optimizedPlan.stats.sizeInBytes
     def serve(nProbe: Int): Seq[(Long, Long, Double)] = {
-      val mapSide = StreamingIndex.serveMapSide(spark, d, "fixture", corpus)
+      val mapSide = Pins.broadcastable(spark, pin)
       StreamingIndex.serveTop1Plan(spark, queries, d, "fixture", cen, "fixture",
-        corpus, mapSide, nProbe).orderBy("qid").as[(Long, Long, Double)].collect().toSeq
+        pin, mapSide, nProbe).orderBy("qid").as[(Long, Long, Double)].collect().toSeq
+    }
+    def atThreshold[T](t: BigInt)(body: => T): T = {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", t.toString)
+      try body finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
     val one = serve(1)
     // 100, 200 → the v3/v5 tie goes to the LOWER vec_id 3; 3 never
@@ -883,13 +891,19 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(two.map(r => (r._1, r._2)) ==
       Seq((3L, 5L), (7L, 8L), (100L, 8L), (200L, 8L)), two)
     assert(two.find(_._1 == 200L).get._3 == 1.0)
-    // above the ceiling the keyed join + windowed top-1 emits the same
-    // rows, cos values included
-    spark.conf.set("graft.serve.broadcastMaxVectors", "0")
-    try {
+    // the threshold at the pin's measured bytes still admits the map
+    atThreshold(pinBytes) {
+      assert(Pins.broadcastable(spark, pin))
       assert(serve(1) == one)
       assert(serve(2) == two)
-    } finally spark.conf.unset("graft.serve.broadcastMaxVectors")
+    }
+    // one byte under it the keyed join + windowed top-1 emits the same
+    // rows, cos values included
+    atThreshold(pinBytes - 1) {
+      assert(!Pins.broadcastable(spark, pin))
+      assert(serve(1) == one)
+      assert(serve(2) == two)
+    }
   }
 
   test("s_neardup_gate re-arrival: under the ceiling a re-sent doc emits its distinct pairs once per arrival") {
@@ -911,7 +925,7 @@ class IndexLifecycleSpec extends SparkSpec {
         graft.operators.IndexStore.BandK)
       val name = s"rearrival_${System.nanoTime()}"
       val q = StreamingIndex.neardupGatePlan(spark, dir, input.toDF(), corpus,
-        4L, dir, "band_gate").writeStream.format("memory").queryName(name)
+        dir, "band_gate").writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       try {
         input.addData(DocEvent(0L, boiler)); q.processAllAvailable()
@@ -928,20 +942,20 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(aboveCeiling(drive()) == Seq((0L, 1L), (0L, 2L)))
   }
 
-  test("pinned builds nest: a pinnedCount inside a pinnedFeed build does not throw Recursive update") {
+  test("pinned builds nest: pins built inside a pinnedFeed build do not throw") {
     import graft.streaming.StreamingIndex
-    // feed and count pins share one cache; 64 inner keys make a shared
+    // feed and scalar pins share one cache; 64 inner keys make a shared
     // bin with the outer key near-certain — the case in which a build
     // running inside ConcurrentHashMap.compute threw
     val d = fixtureDir("documents" -> Seq((0L, "a b c")).toDF("doc_id", "text"))
     val outer = StreamingIndex.pinnedFeed(spark, d, "nest_outer") {
       (0 until 64).map(i =>
-        StreamingIndex.pinnedCount(spark, d, s"nest_inner_$i")(i.toLong)).toVector
+        Pins.pinned(spark, d, s"nest_inner_$i")(i.toLong)).toVector
     }
     assert(outer == (0 until 64).map(_.toLong).toVector)
     // both levels stay pinned: no rebuild on the next access
     assert(StreamingIndex.pinnedFeed[Vector[Long]](spark, d, "nest_outer")(fail("outer rebuilt")) eq outer)
-    assert(StreamingIndex.pinnedCount(spark, d, "nest_inner_7")(fail("inner rebuilt")) == 7L)
+    assert(Pins.pinned[Long](spark, d, "nest_inner_7")(fail("inner rebuilt")) == 7L)
     // the registry itself: 64 distinct keys built inside one build
     val direct = Pins.pinned(spark, d, "nest:direct") {
       (0 until 64).map(i => Pins.pinned(spark, d, s"nest:direct:$i")(i)).sum
@@ -1244,8 +1258,7 @@ class IndexLifecycleSpec extends SparkSpec {
       .select(col("doc_id"), col("gtext"), col("h"))
     def pairs(t: String): Set[(Long, Long)] = graft.streaming.StreamingIndex
       .substringCandidatePairs(spark, probes,
-        spark.table(t).select(col("h"), col("gtext"), col("doc_id")),
-        Long.MaxValue, "")
+        spark.table(t).select(col("h"), col("gtext"), col("doc_id")), "")
       .as[(Long, Long)].collect().toSet
     assert(pairs(cmpT) == pairs(updT))
   }
@@ -1287,7 +1300,7 @@ class IndexLifecycleSpec extends SparkSpec {
     val probeB = probe(998L, ((23 to 29).map(i => s"b$i") :+ "zz").mkString(" "))
     def pairs(p: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       graft.streaming.StreamingIndex
-        .substringCandidatePairs(spark, p, corpusPin, Long.MaxValue, full)
+        .substringCandidatePairs(spark, p, corpusPin, full)
         .as[(Long, Long)].collect().toSet
     spark.conf.set("graft.index.durable", "updated")
     try {
@@ -1305,7 +1318,7 @@ class IndexLifecycleSpec extends SparkSpec {
       val bandPairs = graft.streaming.StreamingIndex
         .neardupCandidatePairs(spark, bandProbe,
           graft.operators.Dedup.md5BandIndex(spark, full,
-            graft.operators.IndexStore.BandK), Long.MaxValue, full)
+            graft.operators.IndexStore.BandK), full)
         .as[(Long, Long)].collect().toSet
       assert(bandPairs == Set((f3, f2)), bandPairs)
     } finally spark.conf.unset("graft.index.durable")
@@ -1337,7 +1350,7 @@ class IndexLifecycleSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val durable = graft.streaming.StreamingIndex
-        .substringCandidatePairs(spark, probes, corpusPin, Long.MaxValue, d)
+        .substringCandidatePairs(spark, probes, corpusPin, d)
       val plan = durable.queryExecution.executedPlan
       val smj = plan.collectFirst { case j: SortMergeJoinExec => j }
       assert(smj.isDefined, plan.toString)
@@ -1355,7 +1368,7 @@ class IndexLifecycleSpec extends SparkSpec {
       val upd = graft.operators.IndexStore.durableGramUpd(spark, d)
         .select(col("h"), col("gtext"), col("doc_id"))
       val viaBroadcast = graft.streaming.StreamingIndex
-        .substringCandidatePairs(spark, probes, broadcast(upd), 1L, "")
+        .substringCandidatePairs(spark, probes, broadcast(upd), "")
         .as[(Long, Long)].collect().sorted.toSeq
       assert(viaTable == viaBroadcast)
       assert(viaTable.nonEmpty)
@@ -1404,16 +1417,16 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(got.toSet == Set((f1, b1), (e3, e2)), got)
     assert(got.map(_._2).forall(Set(b1, f2, e2)),
       "dup_id escaped base ∪ a₁ ∪ a₂")
-    // conf-regime agreement above the posting ceiling
+    // conf-regime agreement in the keyed regime (threshold -1)
     spark.conf.set("graft.index.durable", "updated2")
-    spark.conf.set("graft.substring.broadcastMaxPostings", "0")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val viaConf = SparkEntry.queries("s_substring_gate")(spark, dir)
         .as[(Long, Long)].collect().toSeq
       assert(viaConf == got, viaConf)
     } finally {
       spark.conf.unset("graft.index.durable")
-      spark.conf.unset("graft.substring.broadcastMaxPostings")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
     // the band twin serves the same generation-2 state: e3 collides
     // with e2 only (z's bands entered through the day-2 admission)
@@ -1440,7 +1453,7 @@ class IndexLifecycleSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val durable = graft.streaming.StreamingIndex
-        .substringCandidatePairs(spark, probes, corpusPin, Long.MaxValue, dir)
+        .substringCandidatePairs(spark, probes, corpusPin, dir)
       val plan = durable.queryExecution.executedPlan
       val smj = plan.collectFirst { case j: SortMergeJoinExec => j }
       assert(smj.isDefined, plan.toString)
@@ -1492,17 +1505,17 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(got.map(_._2).forall(Set(bIds(0), f2)),
       "dup_id escaped base ∪ admitted")
     // conf-regime agreement: the FULL gate pointed at the updated
-    // index via `graft.index.durable=updated` (above the posting
-    // ceiling) serves exactly this declared row's content
+    // index via `graft.index.durable=updated` (in the keyed regime,
+    // threshold -1) serves exactly this declared row's content
     spark.conf.set("graft.index.durable", "updated")
-    spark.conf.set("graft.substring.broadcastMaxPostings", "0")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val viaConf = SparkEntry.queries("s_substring_gate")(spark, dir)
         .as[(Long, Long)].collect().toSeq
       assert(viaConf == got, viaConf)
     } finally {
       spark.conf.unset("graft.index.durable")
-      spark.conf.unset("graft.substring.broadcastMaxPostings")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
     // and without the conf, the full gate sees the full corpus — the
     // two regimes genuinely differ on this fixture (both y and d2 have
@@ -1834,7 +1847,7 @@ class IndexLifecycleSpec extends SparkSpec {
       val corpus = graft.operators.IndexStore.durableGramUpd(spark, dir)
         .select(col("h"), col("gtext"), col("doc_id"))
       val q = graft.streaming.StreamingIndex
-        .substringCandidatePairs(spark, probes, corpus, Long.MaxValue, "")
+        .substringCandidatePairs(spark, probes, corpus, "")
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       (input, q)
@@ -1914,7 +1927,7 @@ class IndexLifecycleSpec extends SparkSpec {
     val base = SparkEntry.queries("s_substring_gate")(spark, d)
       .select("doc_id", "dup_id").as[(Long, Long)].collect().sorted.toSeq
     spark.conf.set("graft.index.durable", "true")
-    spark.conf.set("graft.substring.broadcastMaxPostings", "0")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val durable = SparkEntry.queries("s_substring_gate")(spark, d)
         .select("doc_id", "dup_id").as[(Long, Long)].collect().sorted.toSeq
@@ -1928,7 +1941,7 @@ class IndexLifecycleSpec extends SparkSpec {
       assert(plan.contains("graft_gram_idx"), plan)
     } finally {
       spark.conf.unset("graft.index.durable")
-      spark.conf.unset("graft.substring.broadcastMaxPostings")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 
@@ -1943,9 +1956,9 @@ class IndexLifecycleSpec extends SparkSpec {
       graft.Tables.documents(spark, d)
         .select(col("doc_id"), split(col("text"), " ").as("tk")))
       .select(col("doc_id"), col("gtext"), col("h"))
-    // baseline: the under-ceiling broadcast plan's rows
+    // baseline: the session pin's rows (no durable conf yet)
     val base = graft.streaming.StreamingIndex
-      .substringCandidatePairs(spark, probes, corpusPin, 1L, d)
+      .substringCandidatePairs(spark, probes, corpusPin, d)
       .as[(Long, Long)].collect().sorted.toSeq
     // the 100 TB degraded regime with the durable store on: force SMJ
     // (no broadcast) and AQE off so the static physical tree is the
@@ -1957,7 +1970,7 @@ class IndexLifecycleSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val durable = graft.streaming.StreamingIndex
-        .substringCandidatePairs(spark, probes, corpusPin, Long.MaxValue, d)
+        .substringCandidatePairs(spark, probes, corpusPin, d)
       val plan = durable.queryExecution.executedPlan
       val smj = plan.collectFirst { case j: SortMergeJoinExec => j }
       assert(smj.isDefined, plan.toString)
@@ -1977,11 +1990,12 @@ class IndexLifecycleSpec extends SparkSpec {
       def bandProbes = graft.operators.Dedup.md5BandProbes(
         graft.Tables.documents(spark, d)
           .select(col("doc_id"), split(col("text"), " ").as("tk")), 16)
+      // baseline: the session pin's rows (dir = "" keeps the pin)
       val bandBase = graft.streaming.StreamingIndex
-        .neardupCandidatePairs(spark, bandProbes, bandPin, 1L, d)
+        .neardupCandidatePairs(spark, bandProbes, bandPin, "")
         .as[(Long, Long)].collect().sorted.toSeq
       val bandDurable = graft.streaming.StreamingIndex
-        .neardupCandidatePairs(spark, bandProbes, bandPin, Long.MaxValue, d)
+        .neardupCandidatePairs(spark, bandProbes, bandPin, d)
       val bandStatic = bandDurable.queryExecution.executedPlan.collectFirst {
         case j: SortMergeJoinExec =>
           Seq(j.left, j.right).find(side => side.collectFirst {

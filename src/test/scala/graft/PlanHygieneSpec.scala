@@ -470,10 +470,9 @@ class PlanHygieneSpec extends SparkSpec {
         concat(lit("k"), col("id") % 1000).as("band_key"))
     val oldThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (512 * 1024).toString)
-    spark.conf.set("graft.neardup.broadcastMaxDocs", "0")
     try {
       val pairs = graft.streaming.StreamingIndex
-        .neardupCandidatePairs(spark, probes, corpus, nDocs = 200000L)
+        .neardupCandidatePairs(spark, probes, corpus)
       pairs.collect()
       val p = pairs.queryExecution.executedPlan.toString
       assert(p.contains("BroadcastHashJoin"), p)
@@ -481,7 +480,6 @@ class PlanHygieneSpec extends SparkSpec {
       assert(!p.contains("SortMergeJoin"), p)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
-      spark.conf.unset("graft.neardup.broadcastMaxDocs")
     }
   }
 
@@ -507,10 +505,9 @@ class PlanHygieneSpec extends SparkSpec {
         (col("id") + 10).as("doc_id"))
     val oldThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (512 * 1024).toString)
-    spark.conf.set("graft.substring.broadcastMaxPostings", "0")
     try {
       val pairs = graft.streaming.StreamingIndex
-        .substringCandidatePairs(spark, probes, corpus, nPostings = 200000L)
+        .substringCandidatePairs(spark, probes, corpus)
       pairs.collect()
       val p = pairs.queryExecution.executedPlan.toString
       assert(p.contains("BroadcastHashJoin"), p)
@@ -518,7 +515,6 @@ class PlanHygieneSpec extends SparkSpec {
       assert(!p.contains("SortMergeJoin"), p)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThresh)
-      spark.conf.unset("graft.substring.broadcastMaxPostings")
     }
   }
 
@@ -664,5 +660,31 @@ class PlanHygieneSpec extends SparkSpec {
       SparkEntry.queries("s_neardup_gate")(spark, sf("sf0.001"))
         .write.format("noop").mode("overwrite").save()
     assert(operators.Dedup.bandBuilds.get() == before + 1)
+  }
+
+  test("Pins.checkpoint: a pin carries its measured row count and row bytes, so the planner broadcasts it") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.functions.col
+    // a self-join's origin estimate multiplies its sides (hundreds of
+    // MiB for these 1,500 rows); the pin must carry what it holds
+    val orders = Tables.orders(spark, sf("sf0.001"))
+    val pin = Pins.checkpoint(orders.join(orders.select(col("o_orderkey")), "o_orderkey"))
+    val n = pin.count()
+    val stats = pin.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(BigInt(n)), stats)
+    val rowBytes = pin.queryExecution.toRdd
+      .map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).fold(0L)(_ + _)
+    assert(stats.sizeInBytes == BigInt(rowBytes), stats)
+    // an unhinted join of a relation over the threshold (the 160 MB
+    // range estimate) against the pin broadcasts the pin at the
+    // default threshold
+    assert(org.apache.spark.sql.GraftColumnBridge.broadcastThreshold(spark) == 10L << 20)
+    val planned = spark.range(0, 20000000).join(pin, col("id") === col("o_orderkey"))
+      .queryExecution.sparkPlan
+    val bhj = planned.collectFirst { case j: BroadcastHashJoinExec => j }
+    assert(bhj.exists(_.buildSide == BuildRight), planned.toString)
+    assert(planned.collectFirst { case j: SortMergeJoinExec => j }.isEmpty, planned.toString)
   }
 }
