@@ -105,31 +105,45 @@ object Bench {
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 
+  /** Every session-cached index build and durable store a declared query
+    * reads, by name, in the order Bench prices them before its
+    * per-query loop (build-once/probe-many, the lifecycle a deployed
+    * index has). Priced apart, each build has its own number instead of
+    * hiding inside whichever consumer ran first, where the cold/warm
+    * rep spread would also false-trip the contamination flag
+    * (q_index_refresh spread 7.4× at sf0.1 when its chain built in
+    * rep 1; the first q_dedup_index_update and q_corpus_apply reps
+    * spread 7.8× and 9.6× against their no-op second reps). The durable
+    * stores are fp-stamped on disk, so only a stale store rebuilds.
+    * `graft.tools.Profile` runs these by name. */
+  val builds: Seq[(String, (SparkSession, String) => Any)] = {
+    import graft.operators.{Corpus, Dedup, IndexStore, ProductQuant, Similarity}
+    Seq(
+      ("ivf", Similarity.ivfIndex(_, _)),
+      ("pq", ProductQuant.pqIndex(_, _)),
+      ("band", Dedup.md5BandIndex(_, _, IndexStore.BandK)),
+      ("refresh_ivf", Similarity.preArrivalIndex(_, _)),
+      ("refresh_pq", ProductQuant.preArrivalCodebooks(_, _)),
+      ("base_product", Corpus.ensureBaseProduct(_, _)),
+      // both bucketed tables AND the per-version summary cache, so loop
+      // reps of q_dedup_index_persist are pure 2-row reads
+      ("dedup_idx", IndexStore.dedupIndexPersist(_, _).count()),
+      ("dedup_upd", IndexStore.dedupIndexUpdate(_, _).count()),
+      ("apply_delta", Corpus.corpusApply(_, _).count()),
+      ("dedup_upd2", IndexStore.dedupIndexUpdate2(_, _).count()),
+      ("apply_delta2", Corpus.corpusApply2(_, _).count()),
+      // one stamped rewrite of the product chain + one single-write
+      // fold of the gate tables
+      ("compact", (s, d) => {
+        Corpus.corpusCompact(s, d).count()
+        IndexStore.dedupIndexCompact(s, d).count()
+      }))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // dev knob: SPARK_GRAFT_CONF="k=v;k=v" applies session confs before
-    // the run (regime experiments — e.g. forcing a gate's size-gate
-    // branch); the driver never sets it, so round artifacts are
-    // unaffected. Pairs split on ';' so a conf VALUE may contain ','
-    // (round-15 advice: the ','-split silently misparsed such values);
-    // a ','-separated list with no ';' still parses for compatibility.
-    sys.env.get("SPARK_GRAFT_CONF").foreach { raw =>
-      raw.split(if (raw.contains(";")) ";" else ",").foreach { kv =>
-        val i = kv.indexOf('=')
-        if (i > 0) spark.conf.set(kv.take(i), kv.drop(i + 1))
-      }
-    }
+    val spark = LocalSession()
     // 1/5/15-min load BEFORE this JVM ramps up: a loadavg already near
     // the core count means another process is competing for CPU and the
     // timings below are contaminated.
@@ -143,60 +157,12 @@ object Bench {
     try SparkEntry.queries("q_facility_info_by_minute")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    // EVERY session-cached index build is paid and MEASURED here, before
-    // the per-query loop (build-once/probe-many — the lifecycle a
-    // deployed index has): the per-query numbers are then probe costs,
-    // and each build has its own number instead of hiding inside
-    // whichever consumer ran first — where the cold/warm rep spread
-    // would also false-trip the contamination flag below (q_index_refresh
-    // legitimately spread 7.4× at sf0.1 when its chain built in rep 1).
-    def timedBuild(f: => Any): Option[Double] = {
+    // EVERY build in [[builds]] is paid and MEASURED here, before the
+    // per-query loop, so the per-query numbers are probe costs
+    val buildSec = builds.map { case (n, f) =>
       val t0 = System.nanoTime()
-      try { f; Some((System.nanoTime() - t0) / 1e9) }
-      catch { case scala.util.control.NonFatal(_) => None }
-    }
-    val idxBuildSec = timedBuild(graft.operators.Similarity.ivfIndex(spark, sfDir))
-    val pqBuildSec = timedBuild(graft.operators.ProductQuant.pqIndex(spark, sfDir))
-    val bandBuildSec = timedBuild(graft.operators.Dedup.md5BandIndex(spark, sfDir, graft.operators.IndexStore.BandK))
-    val refreshIvfSec = timedBuild(graft.operators.Similarity.preArrivalIndex(spark, sfDir))
-    val refreshPqSec = timedBuild(graft.operators.ProductQuant.preArrivalCodebooks(spark, sfDir))
-    // r13 durable stores: the base corpus product (q_corpus_apply /
-    // q_tokenizer_drift's "yesterday's build") and the bucketed dedup
-    // index tables — fp-stamped on disk, so only a stale store rebuilds;
-    // priced here so the consumers report probe/apply cost, not build
-    val baseProductSec = timedBuild(graft.operators.Corpus.ensureBaseProduct(spark, sfDir))
-    val dedupIdxSec = timedBuild {
-      // the full persist row: builds both bucketed tables AND the r15
-      // per-version summary cache, so loop reps of q_dedup_index_persist
-      // are pure 2-row reads (the r14 √-law file-count regression)
-      graft.operators.IndexStore.dedupIndexPersist(spark, sfDir).count()
-    }
-    // the update tables (base split + admitted append) are a separate
-    // durable pair, priced here as dedup_upd: while unpriced, their
-    // first q_dedup_index_update rep spread 7.8× against the no-op
-    // second rep and false-tripped the contamination gate on a
-    // contended host
-    val updIdxSec = timedBuild(
-      graft.operators.IndexStore.dedupIndexUpdate(spark, sfDir).count())
-    // the r14 stamped corpus-apply delta write, same story: the first
-    // q_corpus_apply rep paid the one-per-corpus-version delta write
-    // (spread 9.6× against the read-only second rep — false-tripped
-    // the spread gate); priced here as apply_delta so loop reps are
-    // pure reads
-    val applyDeltaSec = timedBuild(
-      graft.operators.Corpus.corpusApply(spark, sfDir).count())
-    // the r15 generation-2 chain: the upd2 table pair (base + two
-    // stamped appends) and the delta2 product write, priced here for
-    // the same reason as their gen-1 twins
-    val updIdx2Sec = timedBuild(
-      graft.operators.IndexStore.dedupIndexUpdate2(spark, sfDir).count())
-    val applyDelta2Sec = timedBuild(
-      graft.operators.Corpus.corpusApply2(spark, sfDir).count())
-    // the r15 compaction verb: one stamped rewrite of the product
-    // chain + one single-write fold of the gate tables
-    val compactSec = timedBuild {
-      graft.operators.Corpus.corpusCompact(spark, sfDir).count()
-      graft.operators.IndexStore.dedupIndexCompact(spark, sfDir).count()
+      n -> (try { f(spark, sfDir); Some((System.nanoTime() - t0) / 1e9) }
+        catch { case scala.util.control.NonFatal(_) => None })
     }
     // optional args(0): comma-separated query filter (dev only; the
     // driver invokes with no args and measures everything)
@@ -318,13 +284,9 @@ object Bench {
       case None => """"suspect":false"""
     }) + s""","baseline_median_ratio":${medianRatio.map(f3).getOrElse("null")}"""
     def optF3(v: Option[Double]): String = v.map(f3).getOrElse("null")
-    val idxJson = s""""ivf_index_build_sec":${optF3(idxBuildSec)},""" +
-      s""""index_builds":{"pq":${optF3(pqBuildSec)},"band":${optF3(bandBuildSec)},""" +
-      s""""refresh_ivf":${optF3(refreshIvfSec)},"refresh_pq":${optF3(refreshPqSec)},""" +
-      s""""base_product":${optF3(baseProductSec)},"dedup_idx":${optF3(dedupIdxSec)},""" +
-      s""""dedup_upd":${optF3(updIdxSec)},"apply_delta":${optF3(applyDeltaSec)},""" +
-      s""""dedup_upd2":${optF3(updIdx2Sec)},"apply_delta2":${optF3(applyDelta2Sec)},""" +
-      s""""compact":${optF3(compactSec)}}"""
+    val idxJson = s""""ivf_index_build_sec":${optF3(buildSec.head._2)},""" +
+      buildSec.tail.map { case (n, v) => s""""$n":${optF3(v)}""" }
+        .mkString("\"index_builds\":{", ",", "}")
     // Serving latency for the streaming index stack: per-micro-batch
     // triggerExecution durations (data-carrying batches only), recorded
     // synchronously by StreamingIndex after each run — p50/p95 is THE

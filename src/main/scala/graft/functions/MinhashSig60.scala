@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * `array_min(transform(...))`) evaluates its higher-order lambdas
   * INTERPRETED — one boxed expression eval per shingle per component —
   * and profiled 2.4× slower than the exploded codegen'd batch chain
-  * (ProfileNeardup: 6.4 s of s_neardup_gate's 10 s was probe hashing
+  * (6.4 s of s_neardup_gate's 10 s was probe hashing
   * at sf0.1). Here the shingle bytes stream straight into the digest
   * (`update(tok₀) update(' ') … update("#a")` ≡ md5 of the
   * concatenation — no shingle string is ever materialized) and all k

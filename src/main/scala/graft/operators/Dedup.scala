@@ -255,7 +255,7 @@ object Dedup {
     * shuffle per micro-batch. Round 8: the signature comes from the
     * native one-pass [[graft.functions.MinhashSig60]] (the earlier
     * `transform` + k × `array_min(transform)` form evaluated its
-    * higher-order lambdas interpreted — ProfileNeardup measured it as
+    * higher-order lambdas interpreted — measured as
     * 6.4 s of the 10 s gate at sf0.1, ~2.4× the codegen'd cost of the
     * same hashes), then the bands via [[md5BandKeys]] VERBATIM — one
     * band construction shared with the batch index, so the sketch and

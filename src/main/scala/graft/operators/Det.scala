@@ -26,7 +26,7 @@ object Det {
     * is pure IEEE arithmetic, identical in both engines), longs sum
     * exactly, one division converts back. Same determinism as the
     * decimal form but at raw-long aggregation speed — the decimal sum
-    * measured 3.5× slower (graft.tools.MicroBench). Headroom: int64
+    * measured 3.5× slower. Headroom: int64
     * carries ~1e14 rows/group at 1e5 magnitudes; beyond that use the
     * decimal form ([[dsumExact]]).
     * SQL: `CAST(SUM(CAST(floor(x * 10000 + 0.5) AS BIGINT)) AS DOUBLE) / 10000.0`. */

@@ -397,7 +397,7 @@ object ProductQuant {
     ivfPqRerankAt(s, d, RerankR)
 
   /** [[ivfPqRerank]] at an arbitrary shortlist depth — the sweep
-    * surface behind the R operating curve (tools.RerankSweep). */
+    * surface behind the R operating curve (`Sweep rerank`). */
   private[graft] def ivfPqRerankAt(s: SparkSession, d: String, r: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (adc, sv, psv) = composedAdc(s, d)

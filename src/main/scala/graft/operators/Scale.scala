@@ -435,7 +435,7 @@ object Scale {
     * binding constraint is COMPUTE, not broadcast memory: the
     * anti-join evaluates O(|cand|²) dominance pairs, and the measured
     * crossover on a fully anti-correlated corpus (SKYLINE_STRESS.json,
-    * local[32]) is BELOW 20k candidates — 2.8 s at 20k, 21.2 s at 60k
+    * 32 local cores) is BELOW 20k candidates — 2.8 s at 20k, 21.2 s at 60k
     * (the quadratic cliff), vs a flat ~1.5–2.1 s for the sweep at up
     * to 180k. 16k caps the anti-join at ~2.7e8 pairs (sub-second
     * anywhere) while keeping the plan-simple branch for the common

@@ -387,7 +387,7 @@ object Similarity {
   /** [[ivf]] with the probe width exposed — nprobe is THE operating
     * knob of an IVF deployment (recall rises, probe cost grows as
     * nprobe/nlist of the corpus); the declared query pins nprobe=2,
-    * tools/NprobeSweep measures the curve. */
+    * `Sweep nprobe` measures the curve. */
   private[graft] def ivfAt(s: SparkSession, d: String, nprobe: Int): DataFrame = {
     val e = Tables.embeddings(s, d)
     val (cen, cells) = ivfIndex(s, d)
@@ -504,7 +504,7 @@ object Similarity {
   def annRecall(s: SparkSession, d: String): DataFrame =
     annRecallAt(s, d, nprobe = 2)
 
-  /** [[annRecall]] with the probe width exposed (tools/NprobeSweep
+  /** [[annRecall]] with the probe width exposed (`Sweep nprobe`
     * measures recall vs nprobe on this). */
   private[graft] def annRecallAt(s: SparkSession, d: String, nprobe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -990,7 +990,7 @@ object Similarity {
     annFilteredAt(s, d, Seq(FilterLabel), FilteredNprobes)
 
   /** [[annFiltered]] with the filter's label set (selectivity) and the
-    * probe widths exposed — tools/FilteredSweep measures the
+    * probe widths exposed — `Sweep filtered` measures the
     * selectivity × nprobe recall surface on this; the declared query
     * stays pinned at ({3}, {2, 4}). */
   private[graft] def annFilteredAt(s: SparkSession, d: String,
@@ -1773,8 +1773,8 @@ object Similarity {
   def bqRecall(s: SparkSession, d: String): DataFrame =
     bqRecallAt(s, d, BqRerank)
 
-  /** [[bqRecall]] with the rescore depth exposed (tools/BqSweep
-    * measures the recall-vs-R operating curve on this). */
+  /** [[bqRecall]] with the rescore depth exposed (`Sweep bq` measures
+    * the recall-vs-R operating curve on this). */
   private[graft] def bqRecallAt(s: SparkSession, d: String, rerank: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val e0 = Tables.embeddings(s, d)

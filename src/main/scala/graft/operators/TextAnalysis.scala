@@ -206,7 +206,7 @@ object TextAnalysis {
     * and the compared prefix is capped at 40 chars to bound the DP.
     * `a < b` keeps each unordered pair once, injectively.
     *
-    * r17 (tools/AbEditDist, interleaved min-of-3 at sf0.1, guide
+    * r17 (interleaved min-of-3 at sf0.1, guide
     * §1.4/§2.5): the surviving pair set (10.7k rows) is now
     * materialized BEFORE the declared sort — the range exchange's
     * sampling pass otherwise re-executed the whole banded join + DP a

@@ -63,12 +63,6 @@ object StreamingIndex {
   private[graft] val stateRowsRemoved =
     new java.util.concurrent.ConcurrentHashMap[String, Long]
 
-  /** Full per-batch duration breakdown (queryPlanning / addBatch / …)
-    * of the last run — the profiling observable that separates plan
-    * cost from data cost per trigger (tools/ProfileServe). */
-  private[graft] val lastProgressDurations =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Map[String, Long]]]
-
   private[streaming] def record(base: String, q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
     val prog = q.recentProgress
     stateRowsTotal.merge(
@@ -84,10 +78,6 @@ object StreamingIndex {
     val durs = prog.filter(_.numInputRows > 0)
       .flatMap(p => Option(p.durationMs.get("triggerExecution")).map(_.toLong))
     batchDurationsMs.merge(base, durs.toVector, (a, b) => a ++ b)
-    lastProgressDurations.put(base, prog.filter(_.numInputRows > 0).map { p =>
-      import scala.jdk.CollectionConverters._
-      p.durationMs.asScala.map { case (k, v) => k -> v.toLong }.toMap
-    }.toSeq)
     q match {
       case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
         Option(w.streamingQuery.lastExecution)
@@ -133,10 +123,10 @@ object StreamingIndex {
     * composed ingest. The staggered drive drains the source between
     * chunks, so with the default conf every data batch there is chased
     * by a no-data batch whose only work is eager watermark eviction:
-    * measured (tools/ProfileStartStop) 21 triggers for 10 chunks with
-    * the no-data half costing ~45% of trigger wall time for zero
-    * emitted rows. A production serving tier under continuous traffic
-    * almost never runs them (the source is never drained), and in
+    * measured 21 triggers for 10 chunks with the no-data half costing
+    * ~45% of trigger wall time for zero emitted rows. A production
+    * serving tier under continuous traffic almost never runs them (the
+    * source is never drained), and in
     * update mode the emitted rows are watermark-INDEPENDENT — each
     * data batch emits its own group updates; eviction just folds into
     * the next data batch, where it remains observed (stateRowsRemoved
@@ -381,8 +371,8 @@ object StreamingIndex {
     * rows). A stream-static BROADCAST join re-executes its
     * BroadcastExchange every micro-batch — collect + hash-relation
     * build of the full posting pin per trigger, paid by the no-data
-    * watermark batches too (ProfileRigs: ~60-70 % of the substring
-    * gates' per-batch addBatch at sf0.1 was this rebuild). A serving
+    * watermark batches too (~60-70 % of the substring gates'
+    * per-batch addBatch at sf0.1 was this rebuild). A serving
     * tier holds the posting map in RAM next to the index ONCE — the
     * literal-centroids discipline at posting scale — so the map is
     * collected and broadcast once per (session, corpus stamp) and each
@@ -623,7 +613,7 @@ object StreamingIndex {
     * query reads it (the predicate pushes into the corpus scan of the
     * pin — at 100 TB the serving tier's cell-partitioned store is ALSO
     * label-pruned, reading ~10 % of the bytes); (2) the probe is
-    * WIDENED to the top-2 cells — the FilteredSweep operating surface
+    * WIDENED to the top-2 cells — the `Sweep filtered` operating surface
     * showed one probe doubling restores the unfiltered operating point
     * at ~10 % selectivity, so the serving plan bakes that knob-turn
     * in (probe ties: cos DESC, centroid_id ASC, via the negated-cos
@@ -1297,8 +1287,6 @@ object StreamingIndex {
     * collision pairs replayed in DuckDB over the same gram windows
     * the batch substring oracle builds. */
   def sSubstringGate(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     // the HASHED serving pin (r15): the gate's static side is the gram
     // index projected to (doc_id, ghash) — the 16-byte exact key — so
     // the per-trigger broadcast build carries no gram strings (the
@@ -1308,31 +1296,42 @@ object StreamingIndex {
       graft.operators.Corpus.gramIndex(s, d)
         .select(col("doc_id"), gramKey.as("ghash"))
     }
+    substringGate(s, d, "s_substring_gate", corpus, d, "gram_gate")
+  }
+
+  /** Drive a substring gate rig: every corpus doc arrives once, through
+    * the staggered feed, into a memory table. Probes carry BOTH key
+    * shapes: ghash for the pin regime, the (h, gtext) pair for the
+    * conf-selected durable bucketed joins. `corpus` and `dir` are
+    * [[substringCandidatePairs]]'s; `mapVariant` keys the once-per-pin
+    * posting map. */
+  private def substringGate(s: SparkSession, d: String, rig: String,
+      corpus: DataFrame, dir: String, mapVariant: String): DataFrame = {
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
     val docs = docEvents(s, d)
     EventPairing.withStreamingPartitions(s) {
       val input = MemoryStream[DocEvent]
-      // probes carry BOTH key shapes: ghash for the pin regime, the
-      // (h, gtext) pair for the conf-selected durable bucketed joins
       val probes = graft.operators.Corpus.gramRows(
         input.toDF().select(col("doc_id"), split(col("text"), " ").as("tk")))
         .select(col("doc_id"), col("gtext"), col("h"))
         .withColumn("ghash", gramKey)
-      val gated = substringCandidatePairs(s, probes, corpus, d,
-        Some(() => pinnedPostingMap(s, d, "gram_gate", corpus)))
+      val gated = substringCandidatePairs(s, probes, corpus, dir,
+        Some(() => pinnedPostingMap(s, d, mapVariant, corpus)))
         // +1 day: the initial watermark is epoch 0 and the late-row
         // filter drops rows AT the watermark (see sNeardupGate)
         .withColumn("ts", timestamp_seconds(col("doc_id") + lit(86400L)))
         .withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark("doc_id", "dup_id")
         .select(col("doc_id"), col("dup_id"))
-      val name = s"s_substring_gate_${nameCounter.incrementAndGet()}"
+      val name = s"${rig}_${nameCounter.incrementAndGet()}"
       val q = withLazyEviction(s) {
         gated.writeStream.format("memory").queryName(name)
           .outputMode("append").start()
       }
       try {
-        feedStaggered(input, docs.toSeq.sortBy(_.doc_id), q)
-        record("s_substring_gate", q)
+        feedStaggered(input, docs.sortBy(_.doc_id), q)
+        record(rig, q)
       } finally q.stop()
       s.table(name).orderBy("doc_id", "dup_id")
     }
@@ -1363,8 +1362,6 @@ object StreamingIndex {
     * symmetric exact-gram collisions of all arrivals against the
     * base ∪ admitted gram windows. */
   def sSubstringGateUpd(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     // pinned: a stream-static join re-executes its static side every
     // micro-batch, and unpinned this rig re-read + re-broadcast the
     // bucketed table per trigger — measured 14.0 s vs the session-pin
@@ -1377,33 +1374,10 @@ object StreamingIndex {
       graft.operators.IndexStore.durableGramUpd(s, d)
         .select(col("doc_id"), gramKey.as("ghash"))
     }
-    val docs = docEvents(s, d)
-    EventPairing.withStreamingPartitions(s) {
-      val input = MemoryStream[DocEvent]
-      val probes = graft.operators.Corpus.gramRows(
-        input.toDF().select(col("doc_id"), split(col("text"), " ").as("tk")))
-        .select(col("doc_id"), col("gtext"), col("h"))
-        .withColumn("ghash", gramKey)
-      // dir = "" on purpose: the corpus relation IS the updated table;
-      // a conf-selected diversion to the full-corpus table would
-      // silently change this row's declared content
-      val gated = substringCandidatePairs(s, probes, corpus, "",
-        Some(() => pinnedPostingMap(s, d, "gram_upd", corpus)))
-        .withColumn("ts", timestamp_seconds(col("doc_id") + lit(86400L)))
-        .withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark("doc_id", "dup_id")
-        .select(col("doc_id"), col("dup_id"))
-      val name = s"s_substring_gate_upd_${nameCounter.incrementAndGet()}"
-      val q = withLazyEviction(s) {
-        gated.writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-      }
-      try {
-        feedStaggered(input, docs.toSeq.sortBy(_.doc_id), q)
-        record("s_substring_gate_upd", q)
-      } finally q.stop()
-      s.table(name).orderBy("doc_id", "dup_id")
-    }
+    // dir = "" on purpose: the corpus relation IS the updated table;
+    // a conf-selected diversion to the full-corpus table would
+    // silently change this row's declared content
+    substringGate(s, d, "s_substring_gate_upd", corpus, "", "gram_upd")
   }
 
   /** s_substring_gate_upd2 — the exact-substring gate serving DAY 2's
@@ -1419,38 +1393,13 @@ object StreamingIndex {
     * ([[substringCandidatePairs]]); this declared row pins the served
     * content with a full oracle over the base ∪ a₁ ∪ a₂ gram windows. */
   def sSubstringGateUpd2(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
     val corpus = pinnedCorpus(s, d, "gram_upd2") {
       graft.operators.IndexStore.durableGramUpd2(s, d)
         .select(col("doc_id"), gramKey.as("ghash"))
     }
-    val docs = docEvents(s, d)
-    EventPairing.withStreamingPartitions(s) {
-      val input = MemoryStream[DocEvent]
-      val probes = graft.operators.Corpus.gramRows(
-        input.toDF().select(col("doc_id"), split(col("text"), " ").as("tk")))
-        .select(col("doc_id"), col("gtext"), col("h"))
-        .withColumn("ghash", gramKey)
-      // dir = "" on purpose: the corpus relation IS the updated2 table
-      // (the sSubstringGateUpd contract)
-      val gated = substringCandidatePairs(s, probes, corpus, "",
-        Some(() => pinnedPostingMap(s, d, "gram_upd2", corpus)))
-        .withColumn("ts", timestamp_seconds(col("doc_id") + lit(86400L)))
-        .withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark("doc_id", "dup_id")
-        .select(col("doc_id"), col("dup_id"))
-      val name = s"s_substring_gate_upd2_${nameCounter.incrementAndGet()}"
-      val q = withLazyEviction(s) {
-        gated.writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-      }
-      try {
-        feedStaggered(input, docs.toSeq.sortBy(_.doc_id), q)
-        record("s_substring_gate_upd2", q)
-      } finally q.stop()
-      s.table(name).orderBy("doc_id", "dup_id")
-    }
+    // dir = "" on purpose: the corpus relation IS the updated2 table
+    // (the sSubstringGateUpd contract)
+    substringGate(s, d, "s_substring_gate_upd2", corpus, "", "gram_upd2")
   }
 
   /** s_neardup_gate_upd — [[sSubstringGateUpd]]'s sketch-tier twin:

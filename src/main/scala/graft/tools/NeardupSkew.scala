@@ -4,7 +4,6 @@
 // had never been executed before round 9.
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The near-dup gate's shuffled regime (broadcastMaxDocs=0 — the
@@ -44,18 +43,12 @@ object NeardupSkew {
     val reps = sys.env.getOrElse("SPARK_GRAFT_SKEW_REPS", "2").toInt.max(1)
     val uniform = s"/tmp/graft_ndskew_uniform_$nDocs"
     val hot = s"/tmp/graft_ndskew_hot_${nDocs}_$hotPerTen"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("ERROR")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     // size the gate's state/join partitions to the cores, not the test
     // rigs' 4-way default (see EventPairing.withStreamingPartitions)
-    spark.conf.set("graft.streaming.shufflePartitions", "32")
+    spark.conf.set("graft.streaming.shufflePartitions",
+      spark.conf.get("spark.sql.shuffle.partitions"))
 
     // 40 tokens ≈ an organic doc's shingle load, so the hot twin pays
     // the same per-doc hashing cost and the delta is pure join skew

@@ -2,7 +2,6 @@
 // the celled kNN family on a corpus engineered into ONE giant IVF cell.
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The celled kNN family's Σ|cell|² cost claim is only benign while
@@ -34,14 +33,7 @@ object SkewStress {
     val base = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val uniform = s"/tmp/graft_skew_uniform_x$k"
     val hot = s"/tmp/graft_skew_hot_x$k"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("ERROR")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
     val copies = spark.range(k).select(col("id").cast("int").as("copy"))

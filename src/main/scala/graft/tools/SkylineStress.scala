@@ -4,7 +4,6 @@
 // that had a size gate but no measurement behind the gate's value.
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** q_skyline's candidate union is tiny when (balance, volume)
@@ -35,14 +34,7 @@ object SkylineStress {
       if (args.nonEmpty) args(0).split(",").toSeq.map(_.trim.toInt)
       else Seq(20000, 60000, 180000)
     val reps = sys.env.getOrElse("SPARK_GRAFT_SKEW_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("ERROR")
     import spark.implicits._
 
     def corpus(n: Int): String = {

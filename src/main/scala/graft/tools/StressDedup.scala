@@ -2,7 +2,6 @@
 // the dedup family's growth beyond the largest staged testdata.
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Replicates the sf0.1 corpus K× (default 10 ≈ "sf1") with DECORRELATED
@@ -60,14 +59,7 @@ object StressDedup {
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
     val out = s"/tmp/graft_stress_x$k"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("ERROR")
     // Replicate timestamps as LTZ: the driver's parquet annotates
     // isAdjustedToUTC=false, which Spark 4 infers as TIMESTAMP_NTZ by
     // default — and a Spark-WRITTEN replica then pins NTZ in its footer

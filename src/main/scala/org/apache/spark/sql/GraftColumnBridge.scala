@@ -21,6 +21,12 @@ object GraftColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Blocks until every event already posted to the listener bus has
+    * been delivered: job, stage, SQL-execution and streaming-progress
+    * listeners then hold everything the finished actions produced. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes. */
   def broadcastThreshold(spark: SparkSession): Long =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
